@@ -16,6 +16,7 @@ from __future__ import annotations
 import logging
 import re
 import tempfile
+import threading
 import uuid
 from typing import Any
 
@@ -155,6 +156,10 @@ class Operation:
         # True iff the result's leading column is a changelog RowKind
         # `op` column (set by the streaming result binder)
         self.changelog_result = False
+        # set once execution has finished (or failed); only the async
+        # submit path clears it, so synchronous operations start set
+        self.ready = threading.Event()
+        self.ready.set()
 
     # -- execution ----------------------------------------------------
 
@@ -728,7 +733,7 @@ class Operation:
     def fetch(self, token: int = 0) -> dict[str, Any]:
         if self.status == "ERROR":
             raise self.error if self.error else RuntimeError("operation failed")
-        if not getattr(self, "_ready", True) and self._stream_buffer is None:
+        if not self.ready.is_set() and self._stream_buffer is None:
             return {
                 "columns": [],
                 "data": [],
@@ -960,12 +965,10 @@ class EngineSession:
         """Async submit: returns the handle immediately; ``fetch``
         answers NOT_READY until execution completes — the reference's
         readiness-poll contract (src/notebookController.ts:122-140)."""
-        import threading  # noqa: PLC0415
-
         op = Operation(self, statement)
         self.operations[op.handle] = op
         op.status = "RUNNING"
-        op._ready = False
+        op.ready.clear()
 
         def run() -> None:
             try:
@@ -981,7 +984,7 @@ class EngineSession:
                 op.status = "ERROR"
                 op.error = e
             finally:
-                op._ready = True
+                op.ready.set()
 
         threading.Thread(target=run, daemon=True).start()
         return op

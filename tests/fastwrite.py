@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -26,11 +27,19 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType, _parse_datatype_string
 
 
-def write_rows(path, rows, schema) -> None:
+def write_rows(path, rows, schema, mode: str = "overwrite") -> None:
     """Write ``rows`` (tuples/lists in schema field order) as ONE
     parquet file under directory ``path`` — a drop-in replacement for
     ``spark.createDataFrame(rows, schema).coalesce(1).write
-    .mode("overwrite").parquet(path)``."""
+    .mode(mode).parquet(path)``.
+
+    ``mode="overwrite"`` replaces the directory. ``mode="append"``
+    adds a new, uniquely named part file and never removes a file
+    already there: a running file-source stream may have listed it.
+    The file is written under a hidden name and renamed into place, so
+    a stream never lists a half-written part."""
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
     st = (
         _parse_datatype_string(schema)
         if isinstance(schema, str)
@@ -46,10 +55,11 @@ def write_rows(path, rows, schema) -> None:
         for i, f in enumerate(pa_schema)
     ]
     path = str(path)
-    if os.path.isdir(path):
+    if mode == "overwrite" and os.path.isdir(path):
         shutil.rmtree(path)
     os.makedirs(path, exist_ok=True)
-    pq.write_table(
-        pa.Table.from_arrays(arrays, schema=pa_schema),
-        os.path.join(path, "part-00000.parquet"),
-    )
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    # Spark's file listing skips names starting with "."
+    tmp = os.path.join(path, f".{name}.tmp")
+    pq.write_table(pa.Table.from_arrays(arrays, schema=pa_schema), tmp)
+    os.replace(tmp, os.path.join(path, name))

@@ -12,12 +12,17 @@ error contract, all through urllib against a live server.
 from __future__ import annotations
 
 import json
+import statistics
+import threading
 import time
 import urllib.error
 import urllib.request
+from http.client import HTTPConnection
+from urllib.parse import urlparse
 
 import pytest
 
+from flink_sql_toolkit_spark.engine import Operation
 from flink_sql_toolkit_spark.gateway import Gateway
 
 
@@ -204,6 +209,86 @@ class TestStatements:
         assert status == 200 and out["status"] == "CLOSED"
         status, out = http(gw, "GET", f"/sessions/{h}/operations/{oh}/status")
         assert status == 404
+
+
+class TestRoundTripCost:
+    """Keep-alive round trips skip the delayed-ACK stall, and a result
+    fetch waits briefly for a running statement instead of answering
+    NOT_READY at once and sending the client into a poll loop."""
+
+    @pytest.fixture(scope="class")
+    def h(self, gw):
+        h = open_session(gw, "rtt", {"execution.runtime-mode": "batch"})
+        yield h
+        http(gw, "DELETE", f"/sessions/{h}")
+
+    @pytest.fixture
+    def gate(self, monkeypatch):
+        """A statement naming ``gated_stmt`` executes, sets ``executed``
+        and then finishes only once ``release`` is set; one naming
+        ``gated_stmt_fail`` raises at that point instead."""
+        executed, release = threading.Event(), threading.Event()
+        orig = Operation._execute
+
+        def _execute(op):
+            out = orig(op)
+            if "gated_stmt" in op.statement:
+                executed.set()
+                release.wait(30)
+                if "gated_stmt_fail" in op.statement:
+                    raise RuntimeError("gated statement failed")
+            return out
+
+        monkeypatch.setattr(Operation, "_execute", _execute)
+        yield executed, release
+        release.set()
+
+    def test_keep_alive_round_trip_is_fast(self, gw):
+        url = urlparse(gw.url)
+        conn = HTTPConnection(url.hostname, url.port, timeout=10)
+        try:
+            samples = []
+            for _ in range(21):
+                t0 = time.perf_counter()
+                conn.request("GET", "/v1/info")
+                resp = conn.getresponse()
+                assert resp.status == 200 and "version" in json.loads(resp.read())
+                samples.append(time.perf_counter() - t0)
+        finally:
+            conn.close()
+        # the first request pays for the connect
+        assert statistics.median(samples[1:]) < 0.010, samples
+
+    def test_fetch_answers_when_statement_finishes(self, gw, h, gate):
+        executed, release = gate
+        oh = execute(gw, h, "SELECT 1 AS gated_stmt")
+        assert executed.wait(30)
+        threading.Timer(0.15, release.set).start()
+        page = fetch(gw, h, oh)  # the one and only request
+        assert page["resultType"] != "NOT_READY", page
+        assert page["results"]["data"] == [{"kind": "INSERT", "fields": [1]}]
+
+    def test_never_ready_still_answers_not_ready(self, gw, h, gate):
+        executed, _ = gate
+        oh = execute(gw, h, "SELECT 2 AS gated_stmt")
+        assert executed.wait(30)
+        t0 = time.perf_counter()
+        page = fetch(gw, h, oh)
+        elapsed = time.perf_counter() - t0
+        assert page["resultType"] == "NOT_READY"
+        assert page["nextResultToken"] == 0
+        assert elapsed < 0.5 + 1.0, elapsed
+
+    def test_failure_during_wait_is_two_element_error(self, gw, h, gate):
+        executed, release = gate
+        oh = execute(gw, h, "SELECT 3 AS gated_stmt_fail")
+        assert executed.wait(30)
+        threading.Timer(0.15, release.set).start()
+        status, out = http(gw, "GET", f"/sessions/{h}/operations/{oh}/result/0")
+        assert status == 500, out
+        assert len(out["errors"]) == 2
+        assert "gated statement failed" in out["errors"][0]
+        assert "Exception on server side" in out["errors"][1]
 
 
 class TestStreamingOverHttp:

@@ -16,7 +16,8 @@ outcome is classified:
 - FAIL               anything else — a real engine defect
 
 Usage: python tools/corpus_runner.py [--verbose]
-Exit code 1 iff any FAIL.
+Exit code 1 iff any FAIL; 3 when the corpus file is absent (nothing
+was run, so no tally can be claimed).
 """
 
 from __future__ import annotations
@@ -31,6 +32,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 CORPUS = "/root/reference/test/syntax-test.fsql"
+EXIT_CORPUS_ABSENT = 3
 
 _ENV_PATTERNS = re.compile(
     r"(?i)kafka|jdbc|elasticsearch|hbase|mysql|postgres|mongodb|oracle|sqlserver|"
@@ -220,6 +222,9 @@ def classify_error(stmt: str, err: Exception) -> str:
 
 def main() -> int:
     verbose = "--verbose" in sys.argv
+    if not Path(CORPUS).is_file():
+        print(f"corpus absent: {CORPUS} not found; nothing run", file=sys.stderr)
+        return EXIT_CORPUS_ABSENT
     from flink_sql_toolkit_spark.dialect import split_statements
     from flink_sql_toolkit_spark.engine import Engine
     from flink_sql_toolkit_spark.session import build_spark
