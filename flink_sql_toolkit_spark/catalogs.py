@@ -46,18 +46,10 @@ import re
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
 
+from flink_sql_toolkit_spark.commands import OK, Cols, Rows, _c
+
 if TYPE_CHECKING:  # pragma: no cover
     from flink_sql_toolkit_spark.engine import EngineSession
-
-Cols = list[dict[str, str]]
-Rows = list[list]
-
-
-def _c(*names_types: tuple[str, str]) -> Cols:
-    return [{"name": n, "logicalType": t} for n, t in names_types]
-
-
-_OK: tuple[Cols, Rows] = ([{"name": "result", "logicalType": "string"}], [["OK"]])
 
 
 def _parse_options(text: str) -> dict[str, str]:
@@ -120,21 +112,6 @@ class CatalogRegistry:
         return cat.databases.get(self.current_db or cat.default_database)
 
 
-def _purge_table(session: "EngineSession", name: str) -> None:
-    """Remove a connector table everywhere a drop must reach: the
-    registry, its temp view, and EVERY catalog's browse sets (the same
-    name may be listed under several databases after re-CREATEs) —
-    one definition shared by DROP CATALOG and DROP DATABASE CASCADE,
-    mirroring the engine's DROP TABLE (review r11: two hand-synced
-    copies had already diverged once)."""
-    session.connector_tables.pop(name, None)
-    session.connector_ddl.pop(name, None)
-    session.spark.catalog.dropTempView(name)
-    for cat in session.emulated_catalogs.catalogs.values():
-        for db in cat.databases.values():
-            db.tables.discard(name)
-
-
 # -- statement handlers ------------------------------------------------
 
 
@@ -156,7 +133,7 @@ def handle_catalog_ddl(session: "EngineSession", stmt: str) -> tuple[Cols, Rows]
         name = m.group(2).strip("`")
         if name in reg.catalogs or name in _spark_catalog_names(session):
             if m.group(1):
-                return _OK
+                return OK
             raise ValueError(f"catalog '{name}' already exists")
         opts = _parse_options(m.group(4))
         if "type" not in opts:
@@ -166,7 +143,7 @@ def handle_catalog_ddl(session: "EngineSession", stmt: str) -> tuple[Cols, Rows]
             )
         reg.catalogs[name] = EmulatedCatalog(name, opts, comment=_comment(m.group(3)))
         session.metadata.invalidate("catalogs")
-        return _OK
+        return OK
 
     m = re.match(r"(?is)^DROP\s+CATALOG\s+(IF\s+EXISTS\s+)?([\w`]+)$", s)
     if m:
@@ -183,7 +160,7 @@ def handle_catalog_ddl(session: "EngineSession", stmt: str) -> tuple[Cols, Rows]
                     "cannot be dropped via DDL"
                 )
             if m.group(1):
-                return _OK
+                return OK
             raise LookupError(f"catalog '{name}' does not exist")
         # dropping a catalog implicitly drops its databases: clean up
         # their tables exactly like DROP DATABASE CASCADE does, or the
@@ -191,10 +168,10 @@ def handle_catalog_ddl(session: "EngineSession", stmt: str) -> tuple[Cols, Rows]
         # exists (review r11)
         for edb in reg.catalogs[name].databases.values():
             for t in list(edb.tables):
-                _purge_table(session, t)
+                session.drop_connector_table(t)
         del reg.catalogs[name]
         session.metadata.invalidate()
-        return _OK
+        return OK
 
     m = re.match(
         r"(?is)^ALTER\s+CATALOG\s+([\w`]+)\s+"
@@ -257,7 +234,7 @@ def handle_catalog_ddl(session: "EngineSession", stmt: str) -> tuple[Cols, Rows]
                 cat.properties.pop(key, None)
         else:
             cat.comment = _comment(m.group(5))
-        return _OK
+        return OK
 
     m = re.match(r"(?is)^(?:DESCRIBE|DESC)\s+CATALOG\s+(EXTENDED\s+)?([\w`]+)$", s)
     if m:
@@ -291,7 +268,7 @@ def handle_catalog_ddl(session: "EngineSession", stmt: str) -> tuple[Cols, Rows]
         if cat is not None:
             if db in cat.databases:
                 if m.group(1):
-                    return _OK
+                    return OK
                 raise ValueError(f"database '{cat.name}.{db}' already exists")
             cat.databases[db] = EmulatedDatabase(
                 db,
@@ -299,7 +276,7 @@ def handle_catalog_ddl(session: "EngineSession", stmt: str) -> tuple[Cols, Rows]
                 properties=_parse_options(m.group(4) or ""),
             )
             session.metadata.invalidate("dbs")
-            return _OK
+            return OK
         # Spark catalog: translate Flink's WITH (...) → DBPROPERTIES
         ddl = f"CREATE DATABASE {'IF NOT EXISTS ' if m.group(1) else ''}{db}"
         if m.group(3) is not None:
@@ -308,7 +285,7 @@ def handle_catalog_ddl(session: "EngineSession", stmt: str) -> tuple[Cols, Rows]
             ddl += f" WITH DBPROPERTIES ({_props_sql(_parse_options(m.group(4)))})"
         session.spark.sql(ddl)
         session.metadata.invalidate("dbs")
-        return _OK
+        return OK
 
     m = re.match(
         r"(?is)^DROP\s+DATABASE\s+(IF\s+EXISTS\s+)?([\w.`]+)\s*(RESTRICT|CASCADE)?$", s
@@ -319,7 +296,7 @@ def handle_catalog_ddl(session: "EngineSession", stmt: str) -> tuple[Cols, Rows]
             target = cat.databases.get(db)
             if target is None:
                 if m.group(1):
-                    return _OK
+                    return OK
                 raise LookupError(f"database '{cat.name}.{db}' does not exist")
             if target.tables and (m.group(3) or "RESTRICT").upper() == "RESTRICT":
                 raise ValueError(
@@ -335,16 +312,16 @@ def handle_catalog_ddl(session: "EngineSession", stmt: str) -> tuple[Cols, Rows]
                     f"cannot drop database '{db}': it is the default "
                     f"database of catalog '{cat.name}'"
                 )
-            for t in list(target.tables):  # snapshot: _purge_table
+            for t in list(target.tables):  # snapshot: the drop
                 # discards from target.tables itself too
-                _purge_table(session, t)
+                session.drop_connector_table(t)
             cat.databases.pop(db, None)
             session.metadata.invalidate()
-            return _OK
+            return OK
         ddl = f"DROP DATABASE {'IF EXISTS ' if m.group(1) else ''}{db} {m.group(3) or 'RESTRICT'}"
         session.spark.sql(ddl)
         session.metadata.invalidate()
-        return _OK
+        return OK
 
     m = re.match(r"(?is)^ALTER\s+DATABASE\s+([\w.`]+)\s+SET\s*\((.*)\)$", s)
     if m:
@@ -355,11 +332,11 @@ def handle_catalog_ddl(session: "EngineSession", stmt: str) -> tuple[Cols, Rows]
             if target is None:
                 raise LookupError(f"database '{cat.name}.{db}' does not exist")
             target.properties.update(opts)
-            return _OK
+            return OK
         session.spark.sql(
             f"ALTER DATABASE {db} SET DBPROPERTIES ({_props_sql(opts)})"
         )
-        return _OK
+        return OK
 
     return None
 

@@ -27,6 +27,11 @@ def _c(*names_types: tuple[str, str]) -> Cols:
     return [{"name": n, "logicalType": t} for n, t in names_types]
 
 
+# the result of every statement that only acknowledges (shared: no
+# reader mutates a result in place)
+OK: tuple[Cols, Rows] = (_c(("result", "string")), [["OK"]])
+
+
 # SET key translation (SURVEY §2.1): Flink exec conf → Spark conf
 _SET_TRANSLATION = {
     "parallelism.default": "spark.sql.shuffle.partitions",
@@ -64,7 +69,7 @@ def handle_set(session: "EngineSession", stmt: str) -> tuple[Cols, Rows] | None:
         session.spark.conf.set(_SET_TRANSLATION[key], val)
     elif key.startswith("spark."):
         session.spark.conf.set(key, val)
-    return _c(("result", "string")), [["OK"]]
+    return OK
 
 
 def handle_reset(session: "EngineSession", stmt: str) -> tuple[Cols, Rows] | None:
@@ -80,7 +85,7 @@ def handle_reset(session: "EngineSession", stmt: str) -> tuple[Cols, Rows] | Non
             session.spark.conf.unset(_SET_TRANSLATION[key])
         elif key.startswith("spark."):
             session.spark.conf.unset(key)
-    return _c(("result", "string")), [["OK"]]
+    return OK
 
 
 def _like_filter(stmt: str, names: list[str]) -> list[str]:
@@ -234,7 +239,7 @@ def handle_use(session: "EngineSession", stmt: str) -> tuple[Cols, Rows] | None:
         if name in emu.catalogs:
             emu.current, emu.current_db = name, None
             session.metadata.invalidate()
-            return _c(("result", "string")), [["OK"]]
+            return OK
         try:
             session.spark.catalog.setCurrentCatalog(name)
         except Exception as e:  # Py4J stack → Flink-style typed error
@@ -244,7 +249,7 @@ def handle_use(session: "EngineSession", stmt: str) -> tuple[Cols, Rows] | None:
             ) from e
         emu.current = emu.current_db = None  # back on a real catalog
         session.metadata.invalidate()  # current-context listings changed
-        return _c(("result", "string")), [["OK"]]
+        return OK
     m = re.match(r"(?is)^USE\s+([\w.`]+)\s*;?\s*$", stmt)
     if m:
         name = m.group(1).replace("`", "")
@@ -256,21 +261,21 @@ def handle_use(session: "EngineSession", stmt: str) -> tuple[Cols, Rows] | None:
                 raise LookupError(f"database '{parts[0]}.{parts[1]}' does not exist")
             emu.current, emu.current_db = parts[0], parts[1]
             session.metadata.invalidate()
-            return _c(("result", "string")), [["OK"]]
+            return OK
         cat = emu.current_catalog()
         if cat is not None and len(parts) == 1:
             if name not in cat.databases:
                 raise LookupError(f"database '{cat.name}.{name}' does not exist")
             emu.current_db = name
             session.metadata.invalidate()
-            return _c(("result", "string")), [["OK"]]
+            return OK
         if len(parts) == 2:
             session.spark.sql(f"USE {name}")  # qualified Spark form
         else:
             session.spark.catalog.setCurrentDatabase(name)
         emu.current = emu.current_db = None
         session.metadata.invalidate()
-        return _c(("result", "string")), [["OK"]]
+        return OK
     return None
 
 
@@ -316,7 +321,7 @@ def handle_jobs_admin(session: "EngineSession", stmt: str) -> tuple[Cols, Rows] 
     if m:
         session.spark.sql(f"ADD JAR {m.group(1)!r}")
         session.jars.append(m.group(1))
-        return _c(("result", "string")), [["OK"]]
+        return OK
     m = re.match(r"(?is)^REMOVE\s+JAR\s+'([^']+)'\s*;?\s*$", stmt)
     if m:
         # Spark cannot unload a jar from a running JVM — warn, record
@@ -331,7 +336,7 @@ def handle_jobs_admin(session: "EngineSession", stmt: str) -> tuple[Cols, Rows] 
                 session.modules.append(name)
         elif name in session.modules:
             session.modules.remove(name)
-        return _c(("result", "string")), [["OK"]]
+        return OK
     return None
 
 
@@ -344,7 +349,7 @@ def _refresh_altered(session: "EngineSession", table) -> tuple[Cols, Rows]:
     session.connector_ddl[table.name] = synthesize_ddl(table)
     session._register_view(table)
     session.metadata.invalidate_table(table.name)
-    return _c(("result", "string")), [["OK"]]
+    return OK
 
 
 def _find_column(table, col: str):
@@ -495,7 +500,7 @@ def handle_alter(session: "EngineSession", stmt: str) -> tuple[Cols, Rows] | Non
             # real catalog table → Spark TBLPROPERTIES
             props = m.group(2)
             session.spark.sql(f"ALTER TABLE {name} SET TBLPROPERTIES ({props})")
-            return _c(("result", "string")), [["OK"]]
+            return OK
         # the shared parser owns the '' rule for keys AND values
         # (review r10 pass 6: three drifting copies)
         from flink_sql_toolkit_spark.sources.ddl import parse_option_pairs  # noqa: PLC0415
@@ -517,7 +522,7 @@ def handle_alter(session: "EngineSession", stmt: str) -> tuple[Cols, Rows] | Non
 
             props = ", ".join(f"'{escape_sql_quotes(k)}'" for k in keys)
             session.spark.sql(f"ALTER TABLE {name} UNSET TBLPROPERTIES ({props})")
-            return _c(("result", "string")), [["OK"]]
+            return OK
         if "connector" in keys:
             # Flink: ValidationException on resetting 'connector'
             raise ValueError("ALTER TABLE RESET does not support changing 'connector'")
@@ -551,7 +556,7 @@ def handle_alter(session: "EngineSession", stmt: str) -> tuple[Cols, Rows] | Non
             session.spark.sql(
                 f"ALTER TABLE {name} DROP COLUMNS ({m.group(3) or what})"
             )
-            return _c(("result", "string")), [["OK"]]
+            return OK
         if what.upper() == "WATERMARK":
             if table.watermark is None:
                 raise LookupError(f"table '{name}' has no watermark to drop")
@@ -660,7 +665,7 @@ def handle_alter(session: "EngineSession", stmt: str) -> tuple[Cols, Rows] | Non
         old, new = m.group(2).strip("`"), m.group(3).strip("`")
         if table is None:
             session.spark.sql(f"ALTER TABLE {name} RENAME COLUMN {old} TO {new}")
-            return _c(("result", "string")), [["OK"]]
+            return OK
         # a computed or metadata column is renameable too — the same
         # three-kind case-insensitive resolution DROP and MODIFY
         # WATERMARK use (review r10 #3 / pass 4)
@@ -789,31 +794,28 @@ def handle_alter(session: "EngineSession", stmt: str) -> tuple[Cols, Rows] | Non
                 cm2 = re.match(r"(?s)^([\w`]+)\s+(.+)$", p.strip())
                 df = df.withColumn(cm2.group(1).strip("`"), F.lit(None).cast(_ftts(cm2.group(2))))
             df.createOrReplaceTempView(name)
-        return _c(("result", "string")), [["OK"]]
+        return OK
     m = re.match(r"(?is)^ALTER\s+TABLE\s+([\w`]+)\s+RENAME\s+TO\s+([\w`]+)\s*;?\s*$", stmt)
     if m:
         old, new = m.group(1).strip("`"), m.group(2).strip("`")
         session.metadata.invalidate()  # listings + both names' columns stale
         table = session.connector_tables.pop(old, None)
-        if table is not None:
-            table.name = new
-            session.connector_tables[new] = table
-            from flink_sql_toolkit_spark.sources.ddl import synthesize_ddl  # noqa: PLC0415
-
-            session.connector_ddl.pop(old, None)
-            session.connector_ddl[new] = synthesize_ddl(table)
-            # the emulated-catalog browse registry follows the rename
-            for cat in session.emulated_catalogs.catalogs.values():
-                for db in cat.databases.values():
-                    if old in db.tables:
-                        db.tables.discard(old)
-                        db.tables.add(new)
-            df = session.spark.table(old)
-            session.spark.catalog.dropTempView(old)
-            df.createOrReplaceTempView(new)
-            return _c(("result", "string")), [["OK"]]
-        session.spark.sql(f"ALTER TABLE {old} RENAME TO {new}")
-        return _c(("result", "string")), [["OK"]]
+        if table is None:
+            session.spark.sql(f"ALTER TABLE {old} RENAME TO {new}")
+            return OK
+        table.name = new
+        session.connector_tables[new] = table
+        session.connector_ddl.pop(old, None)
+        # the emulated-catalog browse registry follows the rename
+        for cat in session.emulated_catalogs.catalogs.values():
+            for db in cat.databases.values():
+                if old in db.tables:
+                    db.tables.discard(old)
+                    db.tables.add(new)
+        # rebuild the reader under the new name: an unreadable table
+        # has no view to carry over, and must still rename whole
+        session.spark.catalog.dropTempView(old)
+        return _refresh_altered(session, table)
     return None
 
 

@@ -9,6 +9,16 @@ best-effort idempotent cancel (src/flinkClient.ts:269-296), and
 session auto-recovery (src/sessionManager.ts:257-288) — on Spark:
 ``spark.sql`` + Catalyst for queries, Structured Streaming for
 continuous jobs, a 1000-row ring buffer for live results.
+
+``Operation._execute`` strips leading comments, answers an empty
+statement with OK, and hands the statement to ``_DISPATCH``: one
+ordered tuple of ``(op, stmt) -> (columns, rows) | None`` handlers,
+the first answer wins. The order: COMPILE PLAN (rejected) → row-level
+DML → SET / RESET / SHOW / DESCRIBE / USE / jobs admin / catalog and
+database DDL / ALTER / EXPLAIN → CTAS → CREATE TABLE … LIKE → CREATE
+TABLE … WITH → STATEMENT SET → INSERT into a connector table →
+session VIEW → unqualified DROP → generic (MATCH_RECOGNIZE pre-rewrite,
+dialect rewrite, ``spark.sql``), which always answers.
 """
 
 from __future__ import annotations
@@ -25,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from flink_sql_toolkit_spark import commands
 from flink_sql_toolkit_spark.catalogs import CatalogRegistry, handle_catalog_ddl
+from flink_sql_toolkit_spark.commands import OK, Cols, Rows, _c
 from flink_sql_toolkit_spark.dialect import (
     rewrite,
     split_statements,
@@ -34,6 +45,7 @@ from flink_sql_toolkit_spark.functions.shims import register_function_shims
 from flink_sql_toolkit_spark.sources.connectors import build_reader, build_writer
 from flink_sql_toolkit_spark.sources.ddl import (
     ConnectorTable,
+    matches_create_table_like,
     matches_create_table_with,
     parse_create_table,
     spark_type_to_flink,
@@ -55,22 +67,6 @@ PAGE_SIZE = 1000
 # most recent RETAIN_ROWS rows stay on the driver for page replay — a
 # client paging a 100 TB result never materializes it driver-side
 RETAIN_ROWS = 100 * PAGE_SIZE
-
-_COMMAND_HANDLERS = (
-    commands.handle_set,
-    commands.handle_reset,
-    commands.handle_show,
-    commands.handle_describe,
-    commands.handle_use,
-    commands.handle_jobs_admin,
-    handle_catalog_ddl,
-    commands.handle_alter,
-    commands.handle_explain,
-)
-
-_UNSUPPORTED = {
-    re.compile(r"(?is)^COMPILE\s"): "COMPILE PLAN is Flink-specific and out of scope",
-}
 
 # Flink 1.16 CTAS: CREATE TABLE [IF NOT EXISTS] t [COMMENT] WITH
 # (connector options) AS <query> — no column list; the schema derives
@@ -156,6 +152,13 @@ class Operation:
         # True iff the result's leading column is a changelog RowKind
         # `op` column (set by the streaming result binder)
         self.changelog_result = False
+        # operator result views this operation owns (cancel drops them)
+        self._temp_views: list[str] = []
+        # beyond-watermark drops: the routed operator's accumulator plus
+        # Spark's numRowsDroppedByWatermark summed up to _wm_seen_batch
+        self._late_acc = None
+        self._wm_seen_batch = -1
+        self._wm_dropped_cum = 0
         # set once execution has finished (or failed); only the async
         # submit path clears it, so synchronous operations start set
         self.ready = threading.Event()
@@ -176,403 +179,14 @@ class Operation:
 
     def _execute(self) -> None:
         stmt = strip_leading_comments(self.statement).rstrip(";").strip()
-        sess = self.session
         if not stmt:  # comment-only statement
-            self._columns, self._rows = [{"name": "result", "logicalType": "string"}], [["OK"]]
+            self._columns, self._rows = OK
             return
-        for pat, msg in _UNSUPPORTED.items():
-            if pat.match(stmt):
-                raise NotImplementedError(msg)
-        # row-level DML: copy-on-write on filesystem tables; typed
-        # rejection elsewhere (sources/dml.py)
-        if re.match(r"(?is)^(UPDATE|DELETE|MERGE)\s", stmt):
-            from flink_sql_toolkit_spark.sources.dml import try_execute_dml  # noqa: PLC0415
-
-            self._columns, self._rows = try_execute_dml(sess, stmt)
-            return
-        for handler in _COMMAND_HANDLERS:
-            out = handler(sess, stmt)
+        for handler in _DISPATCH:
+            out = handler(self, stmt)
             if out is not None:
                 self._columns, self._rows = out
                 return
-        cm = _CTAS_RE.match(stmt)
-        if cm:
-            self._execute_ctas(cm)
-            return
-        from flink_sql_toolkit_spark.sources.ddl import (  # noqa: PLC0415
-            matches_create_table_like,
-        )
-
-        lm = matches_create_table_like(stmt + ";")
-        if lm and lm.group("src").strip("`") in sess.connector_tables:
-            self._columns, self._rows = sess.register_like_table(stmt)
-            return
-        # a LIKE whose source is a Spark catalog table falls through to
-        # Spark's own CREATE TABLE ... LIKE
-        if matches_create_table_with(stmt + ";"):
-            self._columns, self._rows = sess.register_connector_table(stmt)
-            return
-        if re.match(r"(?is)^(BEGIN\s+STATEMENT\s+SET|EXECUTE\s+STATEMENT\s+SET)", stmt):
-            self._execute_statement_set(stmt)
-            return
-        m = re.match(r"(?is)^INSERT\s+(INTO|OVERWRITE)\s+([\w.`]+)\s*(\(.*?\))?\s+(SELECT.*|VALUES.*|TABLE.*)$", stmt, re.DOTALL)
-        if m and m.group(2).strip("`") in sess.connector_tables:
-            cols = None
-            if m.group(3):
-                cols = [c.strip().strip("`") for c in m.group(3).strip("()").split(",")]
-            self._execute_insert(
-                m.group(2).strip("`"),
-                m.group(4),
-                overwrite=m.group(1).upper() == "OVERWRITE",
-                columns=cols,
-            )
-            return
-        # session-scoped view semantics: an unqualified CREATE VIEW in
-        # a gateway session is a session object → temp view (Spark
-        # refuses persistent views over temp relations)
-        vm = re.match(r"(?is)^CREATE\s+(OR\s+REPLACE\s+)?(TEMPORARY\s+)?VIEW\s+(IF\s+NOT\s+EXISTS\s+)?([\w`]+)\s+AS\s+(.*)$", stmt, re.DOTALL)
-        if vm and "." not in vm.group(4):
-            sess.spark.sql(
-                f"CREATE OR REPLACE TEMPORARY VIEW {vm.group(4)} AS {rewrite(vm.group(5))}"
-            )
-            sess.metadata.invalidate()
-            self._columns, self._rows = [{"name": "result", "logicalType": "string"}], [["OK"]]
-            return
-        dm = re.match(r"(?is)^DROP\s+(TABLE|TEMPORARY\s+TABLE|VIEW|TEMPORARY\s+VIEW)\s+(IF\s+EXISTS\s+)?([\w`]+)\s*$", stmt)
-        if dm and "." not in dm.group(3):
-            name = dm.group(3).strip("`")
-            # an UNREADABLE connector table (e.g. filesystem path not
-            # yet written) has no temp view, so dropTempView alone
-            # answered False and the drop both removed the registry
-            # entry AND raised "not found" (r11 lifecycle fuzz)
-            was_connector = name in sess.connector_tables
-            is_view_kw = "VIEW" in dm.group(1).upper()
-            # kind mismatch is an error, as in Flink: DROP VIEW must
-            # not destroy a TABLE and vice versa (review r11 — the
-            # keyword was captured but never consulted). Check BEFORE
-            # any mutation; session views are the temp views NOT in
-            # the connector registry.
-            if was_connector and is_view_kw:
-                raise ValueError(
-                    f"'{name}' is a table, not a view — use DROP TABLE"
-                )
-            if not was_connector and not is_view_kw:
-                # targeted lookup, not listTables(): the kind check
-                # must not pay an O(catalog) metastore scan per DROP
-                # (ADVICE r11)
-                try:
-                    kind = sess.spark.catalog.getTable(name).tableType
-                except Exception:
-                    kind = None  # absent → the not-found path below decides
-                if kind in ("TEMPORARY", "VIEW"):
-                    raise ValueError(
-                        f"'{name}' is a view, not a table — use DROP VIEW"
-                    )
-            existed = sess.spark.catalog.dropTempView(name) or was_connector
-            sess.connector_tables.pop(name, None)
-            sess.connector_ddl.pop(name, None)
-            sess.unreadable_tables.pop(name, None)
-            for cat in sess.emulated_catalogs.catalogs.values():
-                for db in cat.databases.values():
-                    db.tables.discard(name)
-            sess.metadata.invalidate()
-            if not existed and not dm.group(2):
-                try:
-                    sess.spark.sql(rewrite(stmt)).collect()
-                except Exception as e:
-                    # map only genuine not-found errors to LookupError;
-                    # anything else (e.g. Spark's own kind-mismatch on
-                    # a persistent table: WRONG_COMMAND_FOR_OBJECT_TYPE
-                    # / "is a view. ... Please use DROP VIEW") must
-                    # surface its real cause (ADVICE r11). Anchored on
-                    # the TABLE_OR_VIEW_NOT_FOUND error condition and
-                    # the legacy "Table or view not found" phrase — a
-                    # bare "not found" substring also matched unrelated
-                    # failures (function/catalog resolution errors
-                    # raised while executing the rewritten DROP) and
-                    # remapped them to the wrong cause (ADVICE r12)
-                    if _is_table_not_found(e):
-                        raise LookupError(
-                            f"table or view '{name}' not found"
-                        ) from None
-                    raise
-            self._columns, self._rows = [{"name": "result", "logicalType": "string"}], [["OK"]]
-            return
-        # MATCH_RECOGNIZE: no Spark SQL equivalent — the CEP operator
-        # runs as a DataFrame op and the statement is rewritten to
-        # read its temp-view result (dialect/mr_sql.py)
-        if re.search(r"(?is)\bMATCH_RECOGNIZE\s*\(", stmt):
-            from flink_sql_toolkit_spark.dialect.mr_sql import (  # noqa: PLC0415
-                rewrite_match_recognize_sql,
-            )
-
-            stmt = rewrite_match_recognize_sql(
-                sess.spark, stmt, ttl_ms=sess.state_ttl_ms()
-            )
-            self._temp_views = list(getattr(self, "_temp_views", [])) + re.findall(
-                r"\b_mr_out_\d+\b", stmt
-            )
-            self._late_acc = getattr(stmt, "late_acc", None)
-        # everything else: the dialect rewrite + spark.sql
-        df = sess.spark.sql(rewrite(stmt))
-        # catalog-mutating statements taking this generic path (CREATE
-        # TABLE/FUNCTION/DATABASE, qualified DROPs, …) stale the
-        # metadata cache — drop it wholesale, like the reference's
-        # full refresh (catalogProvider.ts:49-50)
-        if re.match(r"(?is)^(CREATE|DROP|ALTER)\s", stmt):
-            sess.metadata.invalidate()
-        if df.isStreaming:
-            self._start_stream_select(df)
-            return
-        self.is_query_result = bool(df.schema.fields)
-        self._columns = [
-            {"name": f.name, "logicalType": f.dataType.simpleString()} for f in df.schema.fields
-        ]
-        # Lazy token-paged fetch (src/flinkClient.ts:154-172): rows are
-        # pulled partition-by-partition as the client pages, never
-        # collected wholesale — a full-table SELECT at 100 TB streams
-        # through the driver instead of OOMing it. prefetchPartitions
-        # keeps the next partition in flight so sequential paging does
-        # not stall between partitions.
-        self._rows = []
-        self._row_offset = 0
-        self._row_iter = df.toLocalIterator(prefetchPartitions=True)
-
-    def _execute_ctas(self, m: "re.Match") -> None:
-        """CREATE TABLE … WITH (…) AS <query> (Flink 1.16 CTAS,
-        FLIP-218): derive the schema from the query, register the
-        connector table, then run the INSERT — atomically enough for a
-        gateway session (Flink's own CTAS is create-then-insert too).
-        IF NOT EXISTS on an existing table skips BOTH steps (Flink's
-        documented behavior); a batch query writes inline, a streaming
-        query becomes a continuous INSERT job with a job id."""
-        sess = self.session
-        name = m.group("name").strip("`")
-        # an existing connector table, temp view, or catalog table all
-        # count as "exists" — Flink raises rather than clobbering
-        exists = name in sess.connector_tables or sess.spark.catalog.tableExists(name)
-        if exists:
-            if m.group("ine"):
-                self._columns = [{"name": "result", "logicalType": "string"}]
-                self._rows = [["OK"]]
-                return
-            raise ValueError(f"table '{name}' already exists")
-        query = m.group("query").strip()
-        df = sess.spark.sql(rewrite(query))
-        bad = [f.name for f in df.schema.fields if not re.match(r"^\w+$", f.name)]
-        if bad:
-            raise ValueError(
-                f"CTAS query produces unnamable column(s) {bad} — "
-                "alias each expression (… AS col_name)"
-            )
-        cols = ", ".join(
-            f"`{f.name}` {spark_type_to_flink(f.dataType)}"
-            for f in df.schema.fields
-        )
-        tmp = "TEMPORARY " if m.group("tmp") else ""
-        ddl = f"CREATE {tmp}TABLE `{name}` ({cols}) WITH ({m.group('opts')})"
-        sess.register_connector_table(ddl)
-        try:
-            self._execute_insert(name, query, overwrite=False, query_df=df)
-        except Exception:
-            # failed insert must not leave a half-created table behind —
-            # the rollback mirrors DROP TABLE (registry, reader view,
-            # emulated browse tree, unreadable marker, metadata cache)
-            sess.connector_tables.pop(name, None)
-            sess.connector_ddl.pop(name, None)
-            sess.unreadable_tables.pop(name, None)
-            sess.spark.catalog.dropTempView(name)
-            for cat in sess.emulated_catalogs.catalogs.values():
-                for db in cat.databases.values():
-                    db.tables.discard(name)
-            sess.metadata.invalidate()
-            raise
-
-    def _execute_insert(
-        self,
-        target: str,
-        query: str,
-        *,
-        overwrite: bool,
-        columns: list[str] | None = None,
-        query_df: "DataFrame | None" = None,
-    ) -> None:
-        sess = self.session
-        table = sess.connector_tables[target]
-
-        def _map_columns(frame: "DataFrame") -> "DataFrame":
-            if not columns:
-                return frame
-            # explicit column list: map SELECT output positionally onto
-            # the declared columns, NULL-fill the rest — Flink/ANSI
-            # INSERT INTO t (b, a) semantics (previously the list was
-            # silently ignored → positional misalignment)
-            from pyspark.sql import functions as F  # noqa: PLC0415
-
-            declared = {c.name: c.spark_type for c in table.columns}
-            unknown = [c for c in columns if c not in declared]
-            if unknown:
-                raise ValueError(
-                    f"INSERT column list names unknown column(s) {unknown} "
-                    f"for table '{target}'"
-                )
-            if len(set(columns)) != len(columns):
-                raise ValueError("INSERT column list has duplicate columns")
-            if len(columns) != len(frame.columns):
-                raise ValueError(
-                    f"INSERT column list has {len(columns)} column(s) but the "
-                    f"query produces {len(frame.columns)}"
-                )
-            by_name = frame.select(
-                *[frame[frame.columns[i]].alias(c) for i, c in enumerate(columns)]
-            )
-            return by_name.select(
-                *[
-                    (F.col(c) if c in columns else F.lit(None)).cast(ty).alias(c)
-                    for c, ty in declared.items()
-                ]
-            )
-
-        # MATCH_RECOGNIZE inside an INSERT query: same routing as the
-        # SELECT path (no Spark SQL equivalent — the CEP operator runs
-        # as a DataFrame op behind a temp view). Flink writes MR
-        # results into sinks (INSERT INTO s SELECT … FROM t
-        # MATCH_RECOGNIZE(…)); previously only interactive SELECTs
-        # routed (r13). The view must outlive this operation — the
-        # continuous job reads through it — so it is session-scoped,
-        # not tracked for cancel-time drop like interactive ones.
-        if query_df is None and re.search(r"(?is)\bMATCH_RECOGNIZE\s*\(", query):
-            from flink_sql_toolkit_spark.dialect.mr_sql import (  # noqa: PLC0415
-                rewrite_match_recognize_sql,
-            )
-
-            query = str(
-                rewrite_match_recognize_sql(
-                    sess.spark, query, ttl_ms=sess.state_ttl_ms()
-                )
-            )
-        # CTAS already analyzed the query for schema derivation — reuse
-        # that DataFrame instead of paying rewrite+analysis twice
-        df = _map_columns(
-            query_df if query_df is not None else sess.spark.sql(rewrite(query))
-        )
-        name = sess.flink_conf.get("pipeline.name", f"insert-{target}")
-        # SET 'execution.savepoint.path' = <path from STOP JOB … WITH
-        # SAVEPOINT> resumes the job from that checkpoint — Flink's
-        # own resume mechanism ("Resuming from Savepoints"): the file
-        # source's seen-files log and every stateful operator's state
-        # store recover, so restarted jobs are exactly-once instead of
-        # re-reading the world. Like Flink, the option applies to
-        # every subsequent job until RESET — resuming two DIFFERENT
-        # statements from one path is user error there and here.
-        # A statement set threads each member's derived path in as an
-        # operation-scoped override instead (never via session conf).
-        sp = self._savepoint_override or sess.flink_conf.get(
-            "execution.savepoint.path"
-        )
-        if sp:
-            # two ACTIVE queries sharing one checkpoint dir corrupt
-            # each other's offset/commit logs (Spark doesn't lock
-            # checkpoint locations). Flink's statement set is ONE job
-            # per savepoint; here every INSERT is its own job, so a
-            # second submission while the resumed job still runs is a
-            # typed error, not silent state corruption.
-            for j in sess.jobs.list():
-                if j.checkpoint == sp and j.status == "RUNNING":
-                    raise ValueError(
-                        f"execution.savepoint.path {sp!r} is already in "
-                        f"use by running job {j.job_id} — RESET "
-                        "'execution.savepoint.path' before submitting "
-                        "further jobs"
-                    )
-        ckpt = sp or sess.new_checkpoint(name)
-        try:
-            q = build_writer(
-                df,
-                table,
-                query_name=name,
-                checkpoint=ckpt,
-                trigger_interval=sess.trigger_interval(),
-            )
-        except AnalysisException as e:
-            # Streaming window-TVF aggregation into an APPEND sink:
-            # the default TVF rewrite groups by the extracted
-            # window_start column, which Spark's append-mode checker
-            # does not recognize as a windowed aggregation ("append …
-            # not supported … without watermark"). Retry once with the
-            # struct-keeping rewrite (GROUP BY gains the window()
-            # struct — identical groups, append-legal). Only for the
-            # raw-query path: CTAS frames were already analyzed.
-            cond = _error_condition(e)
-            retriable = (
-                cond.startswith("STREAMING_OUTPUT_MODE")
-                or "without watermark" in str(e)
-            )
-            if not (
-                retriable
-                and query_df is None
-                and re.search(r"(?is)TABLE\s*\(\s*(TUMBLE|HOP|CUMULATE)\s*\(", query)
-            ):
-                raise
-            df = _map_columns(
-                sess.spark.sql(rewrite(query, tvf_group_struct=True))
-            )
-            q = build_writer(
-                df,
-                table,
-                query_name=name,
-                checkpoint=ckpt,
-                trigger_interval=sess.trigger_interval(),
-            )
-        if q is not None:
-            info = sess.jobs.register(q, name, checkpoint=ckpt)
-            self.job_id = info.job_id
-            self._columns = [{"name": "job id", "logicalType": "string"}]
-            self._rows = [[info.job_id]]
-        else:
-            # batch write completed inline: refresh cached file listings
-            # so subsequent reads through the connector view see it
-            if "path" in table.options:
-                sess.spark.catalog.refreshByPath(table.options["path"])
-            sess.refresh_connector_views()
-            self._columns = [{"name": "result", "logicalType": "string"}]
-            self._rows = [["OK"]]
-
-    def _execute_statement_set(self, stmt: str) -> None:
-        """Flink executes a STATEMENT SET as ONE job with one
-        savepoint; here every INSERT is its own Spark query, so the
-        set lays its statements' checkpoints out DETERMINISTICALLY
-        under one root — ``<root>/set-<i>`` in textual order. With
-        ``execution.savepoint.path`` set, the same derivation resumes
-        statement i from ``<path>/set-<i>``: SET the savepoint path to
-        the PARENT directory any set job's STOP JOB … WITH SAVEPOINT
-        returned, resubmit the identical set, and every member
-        resumes exactly-once (r13; Flink stop-with-savepoint → resume
-        contract for sets). A single flat path can't resume a
-        multi-job set — two active queries must never share one
-        checkpoint dir."""
-        sess = self.session
-        inner = re.sub(r"(?is)^BEGIN\s+STATEMENT\s+SET\s*;", "", stmt)
-        inner = re.sub(r"(?is)^EXECUTE\s+STATEMENT\s+SET\s*", "", inner)
-        inner = re.sub(r"(?is)\bEND\s*;?\s*$", "", inner).strip()
-        job_ids = []
-        outer_sp = sess.flink_conf.get("execution.savepoint.path")
-        root = outer_sp or sess.new_checkpoint("stmt-set")
-        # each member's derived path rides its Operation as an
-        # explicit override — the session conf is never mutated, so a
-        # concurrent INSERT on another thread can't adopt a set
-        # member's checkpoint dir mid-set (ADVICE r13 #1)
-        for i, sub in enumerate(split_statements(inner)):
-            member_sp = (
-                f"{root}/set-{i}"
-                if re.match(r"(?is)^\s*INSERT\s", sub)
-                else None
-            )
-            op = Operation(self.session, sub, savepoint_path=member_sp).execute()
-            if op.job_id:
-                job_ids.append(op.job_id)
-        self._columns = [{"name": "job id", "logicalType": "string"}]
-        self._rows = [[j] for j in job_ids] or [["OK"]]
 
     def _start_stream_select(self, df: DataFrame) -> None:
         """Streaming SELECT → ring-buffered incremental results."""
@@ -715,11 +329,9 @@ class Operation:
             # the routing registered `_over_out_N` temp view(s); track
             # them so cancel() drops them instead of leaking catalog
             # entries across a long-lived interactive session
-            self._temp_views = list(getattr(self, "_temp_views", [])) + re.findall(
-                r"\b_(?:over|dedup)_out_\d+\b", routed
-            )
-            self._late_acc = getattr(routed, "late_acc", None)
-            _bind_result(df, getattr(routed, "op_passthrough", False))
+            self._temp_views += re.findall(r"\b_(?:over|dedup)_out_\d+\b", routed)
+            self._late_acc = routed.late_acc
+            _bind_result(df, routed.op_passthrough)
             q = _start_any(df)
         self._stream_query = q
         info = sess.jobs.register(
@@ -761,8 +373,7 @@ class Operation:
                     "isStreaming": True,
                 }
             )
-            late_acc = getattr(self, "_late_acc", None)
-            if late_acc is not None:
+            if self._late_acc is not None:
                 # beyond-watermark drops — Flink's numLateRecordsDropped
                 # metric, surfaced like evictedKeys/skippedRows (VERDICT
                 # r7). Two disjoint sources (verified live, r9): rows
@@ -786,7 +397,7 @@ class Operation:
                         # (review r9)
                         last = self._stream_query.lastProgress
                         last_bid = -1 if last is None else last["batchId"]
-                        seen = getattr(self, "_wm_seen_batch", -1)
+                        seen = self._wm_seen_batch
                         if last_bid > seen:
                             # advance the seen mark to the max batch
                             # actually SUMMED, not to the (possibly
@@ -799,9 +410,7 @@ class Operation:
                                 bid = prog["batchId"]
                                 if bid <= seen:
                                     continue
-                                self._wm_dropped_cum = getattr(
-                                    self, "_wm_dropped_cum", 0
-                                ) + sum(
+                                self._wm_dropped_cum += sum(
                                     so.get("numRowsDroppedByWatermark", 0)
                                     for so in prog.get("stateOperators", [])
                                 )
@@ -809,7 +418,7 @@ class Operation:
                             self._wm_seen_batch = newest
                     except Exception:  # noqa: BLE001 — metrics are best-effort
                         pass
-                page["lateDropped"] = late_acc.value + getattr(self, "_wm_dropped_cum", 0)
+                page["lateDropped"] = self._late_acc.value + self._wm_dropped_cum
             return page
         start = token * PAGE_SIZE
         self._pull_until(start + PAGE_SIZE)
@@ -862,12 +471,12 @@ class Operation:
 
     def cancel(self) -> None:
         """Best-effort, idempotent (reference tolerates every state)."""
-        for v in getattr(self, "_temp_views", ()):
+        for v in self._temp_views:
             try:
                 self.session.spark.catalog.dropTempView(v)
             except Exception:  # noqa: BLE001
                 pass
-        self._temp_views = ()
+        self._temp_views = []
         if self._stream_query is not None:
             try:
                 if self._stream_query.isActive:
@@ -886,6 +495,392 @@ class Operation:
         self.status = "CANCELED"
 
 
+# -- statement dispatch --------------------------------------------------
+#
+# Every handler takes (op, stmt) — stmt stripped of leading comments and
+# the trailing ';' — and answers (columns, rows), or None to pass the
+# statement on. A handler that starts a job or a stream records it on op.
+
+
+def _compile_plan(op: Operation, stmt: str) -> tuple[Cols, Rows] | None:
+    if re.match(r"(?is)^COMPILE\s", stmt):
+        raise NotImplementedError("COMPILE PLAN is Flink-specific and out of scope")
+    return None
+
+
+def _row_dml(op: Operation, stmt: str) -> tuple[Cols, Rows] | None:
+    """UPDATE / DELETE / MERGE: copy-on-write on filesystem tables,
+    typed rejection elsewhere (sources/dml.py)."""
+    if not re.match(r"(?is)^(UPDATE|DELETE|MERGE)\s", stmt):
+        return None
+    from flink_sql_toolkit_spark.sources.dml import try_execute_dml  # noqa: PLC0415
+
+    return try_execute_dml(op.session, stmt)
+
+
+def _on_session(handler):
+    """A session-level command handler (commands.py, catalogs.py) in
+    the dispatch signature."""
+    return lambda op, stmt: handler(op.session, stmt)
+
+
+def _ctas(op: Operation, stmt: str) -> tuple[Cols, Rows] | None:
+    """CREATE TABLE … WITH (…) AS <query> (Flink 1.16 CTAS,
+    FLIP-218): derive the schema from the query, register the
+    connector table, then run the INSERT — atomically enough for a
+    gateway session (Flink's own CTAS is create-then-insert too).
+    IF NOT EXISTS on an existing table skips BOTH steps (Flink's
+    documented behavior); a batch query writes inline, a streaming
+    query becomes a continuous INSERT job with a job id."""
+    m = _CTAS_RE.match(stmt)
+    if not m:
+        return None
+    sess = op.session
+    name = m.group("name").strip("`")
+    # an existing connector table, temp view, or catalog table all
+    # count as "exists" — Flink raises rather than clobbering
+    if name in sess.connector_tables or sess.spark.catalog.tableExists(name):
+        if m.group("ine"):
+            return OK
+        raise ValueError(f"table '{name}' already exists")
+    query = m.group("query").strip()
+    df = sess.spark.sql(rewrite(query))
+    bad = [f.name for f in df.schema.fields if not re.match(r"^\w+$", f.name)]
+    if bad:
+        raise ValueError(
+            f"CTAS query produces unnamable column(s) {bad} — "
+            "alias each expression (… AS col_name)"
+        )
+    cols = ", ".join(
+        f"`{f.name}` {spark_type_to_flink(f.dataType)}"
+        for f in df.schema.fields
+    )
+    tmp = "TEMPORARY " if m.group("tmp") else ""
+    ddl = f"CREATE {tmp}TABLE `{name}` ({cols}) WITH ({m.group('opts')})"
+    sess.register_connector_table(ddl)
+    try:
+        return _write(op, name, query, overwrite=False, query_df=df)
+    except Exception:
+        # a failed insert must not leave a half-created table behind
+        sess.drop_connector_table(name)
+        raise
+
+
+def _create_like(op: Operation, stmt: str) -> tuple[Cols, Rows] | None:
+    # a LIKE whose source is a Spark catalog table falls through to
+    # Spark's own CREATE TABLE ... LIKE
+    lm = matches_create_table_like(stmt + ";")
+    if lm and lm.group("src").strip("`") in op.session.connector_tables:
+        return op.session.register_like_table(stmt)
+    return None
+
+
+def _create_with(op: Operation, stmt: str) -> tuple[Cols, Rows] | None:
+    if matches_create_table_with(stmt + ";"):
+        return op.session.register_connector_table(stmt)
+    return None
+
+
+def _statement_set(op: Operation, stmt: str) -> tuple[Cols, Rows] | None:
+    """Flink executes a STATEMENT SET as ONE job with one
+    savepoint; here every INSERT is its own Spark query, so the
+    set lays its statements' checkpoints out DETERMINISTICALLY
+    under one root — ``<root>/set-<i>`` in textual order. With
+    ``execution.savepoint.path`` set, the same derivation resumes
+    statement i from ``<path>/set-<i>``: SET the savepoint path to
+    the PARENT directory any set job's STOP JOB … WITH SAVEPOINT
+    returned, resubmit the identical set, and every member
+    resumes exactly-once (r13; Flink stop-with-savepoint → resume
+    contract for sets). A single flat path can't resume a
+    multi-job set — two active queries must never share one
+    checkpoint dir."""
+    if not re.match(r"(?is)^(BEGIN\s+STATEMENT\s+SET|EXECUTE\s+STATEMENT\s+SET)", stmt):
+        return None
+    sess = op.session
+    inner = re.sub(r"(?is)^BEGIN\s+STATEMENT\s+SET\s*;", "", stmt)
+    inner = re.sub(r"(?is)^EXECUTE\s+STATEMENT\s+SET\s*", "", inner)
+    inner = re.sub(r"(?is)\bEND\s*;?\s*$", "", inner).strip()
+    job_ids = []
+    root = sess.flink_conf.get("execution.savepoint.path") or sess.new_checkpoint("stmt-set")
+    # each member's derived path rides its Operation as an
+    # explicit override — the session conf is never mutated, so a
+    # concurrent INSERT on another thread can't adopt a set
+    # member's checkpoint dir mid-set (ADVICE r13 #1)
+    for i, sub in enumerate(split_statements(inner)):
+        member_sp = f"{root}/set-{i}" if re.match(r"(?is)^\s*INSERT\s", sub) else None
+        member = Operation(sess, sub, savepoint_path=member_sp).execute()
+        if member.job_id:
+            job_ids.append(member.job_id)
+    return _c(("job id", "string")), [[j] for j in job_ids] or [["OK"]]
+
+
+def _insert(op: Operation, stmt: str) -> tuple[Cols, Rows] | None:
+    """INSERT INTO / OVERWRITE a connector table; an INSERT into a
+    Spark catalog table takes the generic path."""
+    m = re.match(r"(?is)^INSERT\s+(INTO|OVERWRITE)\s+([\w.`]+)\s*(\(.*?\))?\s+(SELECT.*|VALUES.*|TABLE.*)$", stmt)
+    if not m or m.group(2).strip("`") not in op.session.connector_tables:
+        return None
+    cols = None
+    if m.group(3):
+        cols = [c.strip().strip("`") for c in m.group(3).strip("()").split(",")]
+    return _write(
+        op,
+        m.group(2).strip("`"),
+        m.group(4),
+        overwrite=m.group(1).upper() == "OVERWRITE",
+        columns=cols,
+    )
+
+
+def _session_view(op: Operation, stmt: str) -> tuple[Cols, Rows] | None:
+    """Session-scoped view semantics: an unqualified CREATE VIEW in a
+    gateway session is a session object → temp view (Spark refuses
+    persistent views over temp relations)."""
+    vm = re.match(r"(?is)^CREATE\s+(OR\s+REPLACE\s+)?(TEMPORARY\s+)?VIEW\s+(IF\s+NOT\s+EXISTS\s+)?([\w`]+)\s+AS\s+(.*)$", stmt)
+    if not vm or "." in vm.group(4):
+        return None
+    op.session.spark.sql(
+        f"CREATE OR REPLACE TEMPORARY VIEW {vm.group(4)} AS {rewrite(vm.group(5))}"
+    )
+    op.session.metadata.invalidate()
+    return OK
+
+
+def _drop(op: Operation, stmt: str) -> tuple[Cols, Rows] | None:
+    """Unqualified DROP TABLE / VIEW: connector tables and session
+    views are forgotten session-side; anything else is Spark's."""
+    dm = re.match(r"(?is)^DROP\s+(TABLE|TEMPORARY\s+TABLE|VIEW|TEMPORARY\s+VIEW)\s+(IF\s+EXISTS\s+)?([\w`]+)\s*$", stmt)
+    if not dm or "." in dm.group(3):
+        return None
+    sess = op.session
+    name = dm.group(3).strip("`")
+    was_connector = name in sess.connector_tables
+    is_view_kw = "VIEW" in dm.group(1).upper()
+    # kind mismatch is an error, as in Flink: DROP VIEW must
+    # not destroy a TABLE and vice versa (review r11 — the
+    # keyword was captured but never consulted). Check BEFORE
+    # any mutation; session views are the temp views NOT in
+    # the connector registry.
+    if was_connector and is_view_kw:
+        raise ValueError(f"'{name}' is a table, not a view — use DROP TABLE")
+    if not was_connector and not is_view_kw:
+        # targeted lookup, not listTables(): the kind check must not
+        # pay an O(catalog) metastore scan per DROP (ADVICE r11)
+        try:
+            kind = sess.spark.catalog.getTable(name).tableType
+        except Exception:
+            kind = None  # absent → the not-found path below decides
+        if kind in ("TEMPORARY", "VIEW"):
+            raise ValueError(f"'{name}' is a view, not a table — use DROP VIEW")
+    # an UNREADABLE connector table (e.g. filesystem path not yet
+    # written) has no temp view, yet it exists (r11 lifecycle fuzz)
+    if not sess.drop_connector_table(name) and not dm.group(2):
+        try:
+            sess.spark.sql(rewrite(stmt)).collect()
+        except Exception as e:
+            # map only genuine not-found errors (_is_table_not_found)
+            # to LookupError; anything else (e.g. Spark's own
+            # kind-mismatch on a persistent table:
+            # WRONG_COMMAND_FOR_OBJECT_TYPE) must surface its real
+            # cause (ADVICE r11, r12)
+            if _is_table_not_found(e):
+                raise LookupError(f"table or view '{name}' not found") from None
+            raise
+    return OK
+
+
+def _generic(op: Operation, stmt: str) -> tuple[Cols, Rows]:
+    """Everything else: the dialect rewrite + ``spark.sql``. Always
+    answers, so it is the table's last entry."""
+    sess = op.session
+    routed = _route_match_recognize(sess, stmt)
+    if routed is not stmt:
+        # the operator's result views live as long as this operation
+        op._temp_views += re.findall(r"\b_mr_out_\d+\b", routed)
+        op._late_acc = routed.late_acc
+    df = sess.spark.sql(rewrite(routed))
+    # catalog-mutating statements taking this generic path (CREATE
+    # TABLE/FUNCTION/DATABASE, qualified DROPs, …) stale the
+    # metadata cache — drop it wholesale, like the reference's
+    # full refresh (catalogProvider.ts:49-50)
+    if re.match(r"(?is)^(CREATE|DROP|ALTER)\s", stmt):
+        sess.metadata.invalidate()
+    if df.isStreaming:
+        op._start_stream_select(df)
+        return op._columns, []
+    op.is_query_result = bool(df.schema.fields)
+    # Lazy token-paged fetch (src/flinkClient.ts:154-172): rows are
+    # pulled partition-by-partition as the client pages, never
+    # collected wholesale — a full-table SELECT at 100 TB streams
+    # through the driver instead of OOMing it. prefetchPartitions
+    # keeps the next partition in flight so sequential paging does
+    # not stall between partitions.
+    op._row_iter = df.toLocalIterator(prefetchPartitions=True)
+    return _c(*((f.name, f.dataType.simpleString()) for f in df.schema.fields)), []
+
+
+def _write(
+    op: Operation,
+    target: str,
+    query: str,
+    *,
+    overwrite: bool,
+    columns: list[str] | None = None,
+    query_df: "DataFrame | None" = None,
+) -> tuple[Cols, Rows]:
+    """Run ``query`` into connector table ``target``: a streaming
+    query becomes a continuous job (its id is the result), a batch
+    query writes inline."""
+    sess = op.session
+    table = sess.connector_tables[target]
+
+    def _map_columns(frame: "DataFrame") -> "DataFrame":
+        if not columns:
+            return frame
+        # explicit column list: map SELECT output positionally onto
+        # the declared columns, NULL-fill the rest — Flink/ANSI
+        # INSERT INTO t (b, a) semantics (previously the list was
+        # silently ignored → positional misalignment)
+        from pyspark.sql import functions as F  # noqa: PLC0415
+
+        declared = {c.name: c.spark_type for c in table.columns}
+        unknown = [c for c in columns if c not in declared]
+        if unknown:
+            raise ValueError(
+                f"INSERT column list names unknown column(s) {unknown} "
+                f"for table '{target}'"
+            )
+        if len(set(columns)) != len(columns):
+            raise ValueError("INSERT column list has duplicate columns")
+        if len(columns) != len(frame.columns):
+            raise ValueError(
+                f"INSERT column list has {len(columns)} column(s) but the "
+                f"query produces {len(frame.columns)}"
+            )
+        by_name = frame.select(
+            *[frame[frame.columns[i]].alias(c) for i, c in enumerate(columns)]
+        )
+        return by_name.select(
+            *[
+                (F.col(c) if c in columns else F.lit(None)).cast(ty).alias(c)
+                for c, ty in declared.items()
+            ]
+        )
+
+    # MATCH_RECOGNIZE inside an INSERT query: same routing as the
+    # SELECT path (no Spark SQL equivalent — the CEP operator runs
+    # as a DataFrame op behind a temp view). Flink writes MR
+    # results into sinks (INSERT INTO s SELECT … FROM t
+    # MATCH_RECOGNIZE(…)); previously only interactive SELECTs
+    # routed (r13). The view must outlive this operation — the
+    # continuous job reads through it — so it is session-scoped,
+    # not tracked for cancel-time drop like interactive ones.
+    if query_df is None:
+        query = _route_match_recognize(sess, query)
+    # CTAS already analyzed the query for schema derivation — reuse
+    # that DataFrame instead of paying rewrite+analysis twice
+    df = _map_columns(
+        query_df if query_df is not None else sess.spark.sql(rewrite(query))
+    )
+    name = sess.flink_conf.get("pipeline.name", f"insert-{target}")
+    # SET 'execution.savepoint.path' = <path from STOP JOB … WITH
+    # SAVEPOINT> resumes the job from that checkpoint — Flink's
+    # own resume mechanism ("Resuming from Savepoints"): the file
+    # source's seen-files log and every stateful operator's state
+    # store recover, so restarted jobs are exactly-once instead of
+    # re-reading the world. Like Flink, the option applies to
+    # every subsequent job until RESET — resuming two DIFFERENT
+    # statements from one path is user error there and here.
+    # A statement set threads each member's derived path in as an
+    # operation-scoped override instead (never via session conf).
+    sp = op._savepoint_override or sess.flink_conf.get("execution.savepoint.path")
+    if sp:
+        # two ACTIVE queries sharing one checkpoint dir corrupt
+        # each other's offset/commit logs (Spark doesn't lock
+        # checkpoint locations). Flink's statement set is ONE job
+        # per savepoint; here every INSERT is its own job, so a
+        # second submission while the resumed job still runs is a
+        # typed error, not silent state corruption.
+        for j in sess.jobs.list():
+            if j.checkpoint == sp and j.status == "RUNNING":
+                raise ValueError(
+                    f"execution.savepoint.path {sp!r} is already in "
+                    f"use by running job {j.job_id} — RESET "
+                    "'execution.savepoint.path' before submitting "
+                    "further jobs"
+                )
+    ckpt = sp or sess.new_checkpoint(name)
+
+    def _start(frame: DataFrame):
+        return build_writer(
+            frame,
+            table,
+            query_name=name,
+            checkpoint=ckpt,
+            trigger_interval=sess.trigger_interval(),
+        )
+
+    try:
+        q = _start(df)
+    except AnalysisException as e:
+        # Streaming window-TVF aggregation into an APPEND sink:
+        # the default TVF rewrite groups by the extracted
+        # window_start column, which Spark's append-mode checker
+        # does not recognize as a windowed aggregation ("append …
+        # not supported … without watermark"). Retry once with the
+        # struct-keeping rewrite (GROUP BY gains the window()
+        # struct — identical groups, append-legal). Only for the
+        # raw-query path: CTAS frames were already analyzed.
+        cond = _error_condition(e)
+        retriable = (
+            cond.startswith("STREAMING_OUTPUT_MODE")
+            or "without watermark" in str(e)
+        )
+        if not (
+            retriable
+            and query_df is None
+            and re.search(r"(?is)TABLE\s*\(\s*(TUMBLE|HOP|CUMULATE)\s*\(", query)
+        ):
+            raise
+        q = _start(_map_columns(sess.spark.sql(rewrite(query, tvf_group_struct=True))))
+    if q is not None:
+        op.job_id = sess.jobs.register(q, name, checkpoint=ckpt).job_id
+        return _c(("job id", "string")), [[op.job_id]]
+    # batch write completed inline: refresh cached file listings
+    # so subsequent reads through the connector view see it
+    if "path" in table.options:
+        sess.spark.catalog.refreshByPath(table.options["path"])
+    sess.refresh_connector_views()
+    return OK
+
+
+def _route_match_recognize(sess: "EngineSession", sql: str) -> str:
+    """MATCH_RECOGNIZE has no Spark SQL equivalent: the CEP operator
+    runs as a DataFrame op behind a temp view and the statement is
+    rewritten to read it (dialect/mr_sql.py). ``sql`` itself comes back
+    when it has no MATCH_RECOGNIZE clause."""
+    if not re.search(r"(?is)\bMATCH_RECOGNIZE\s*\(", sql):
+        return sql
+    from flink_sql_toolkit_spark.dialect.mr_sql import (  # noqa: PLC0415
+        rewrite_match_recognize_sql,
+    )
+
+    return rewrite_match_recognize_sql(sess.spark, sql, ttl_ms=sess.state_ttl_ms())
+
+
+_DISPATCH = (
+    _compile_plan,
+    _row_dml,
+    *map(_on_session, (
+        commands.handle_set, commands.handle_reset, commands.handle_show,
+        commands.handle_describe, commands.handle_use, commands.handle_jobs_admin,
+        handle_catalog_ddl, commands.handle_alter, commands.handle_explain,
+    )),
+    _ctas, _create_like, _create_with, _statement_set,
+    _insert, _session_view, _drop, _generic,
+)
+
+
 class EngineSession:
     """≙ gateway sessionHandle over an isolated SparkSession."""
 
@@ -899,7 +894,6 @@ class EngineSession:
         self.flink_conf: dict[str, str] = {}
         self.connector_tables: dict[str, ConnectorTable] = {}
         self.connector_ddl: dict[str, str] = {}
-        self.unreadable_tables: dict[str, str] = {}
         self.jobs = JobRegistry()
         # DDL-created catalogs are emulated session-side (Spark cannot
         # load catalog plugins at runtime) — catalogs.py module doc
@@ -997,7 +991,7 @@ class EngineSession:
     def register_connector_table(self, stmt: str):
         table = parse_create_table(stmt + ";")
         if table.name in self.connector_tables and table.if_not_exists:
-            return [{"name": "result", "logicalType": "string"}], [["OK"]]
+            return OK
         key_fmt = table.options.get("key.format", "json")
         if table.connector in ("kafka", "upsert-kafka") and key_fmt != "json":
             # surface the limitation at CREATE TABLE, not first write
@@ -1027,7 +1021,7 @@ class EngineSession:
         self.metadata.invalidate("tables")
         self.metadata.invalidate("views")
         self.metadata.invalidate_table(table.name)
-        return [{"name": "result", "logicalType": "string"}], [["OK"]]
+        return OK
 
     def register_like_table(self, stmt: str):
         """``CREATE TABLE new … LIKE src (like_options)`` (Flink table
@@ -1045,7 +1039,7 @@ class EngineSession:
         name = m.group("name").strip("`")
         if name in self.connector_tables or self.spark.catalog.tableExists(name):
             if m.group("ine"):
-                return [{"name": "result", "logicalType": "string"}], [["OK"]]
+                return OK
             raise ValueError(f"table '{name}' already exists")
         src_name = m.group("src").strip("`")
         src = self.connector_tables.get(src_name)
@@ -1070,12 +1064,28 @@ class EngineSession:
             )
             df = build_reader(self.spark, table, streaming=streaming)
             df.createOrReplaceTempView(table.name)
-            self.unreadable_tables.pop(table.name, None)
         except Exception as e:  # noqa: BLE001
             # write-only connectors (print/blackhole) have no reader;
             # external systems may be unreachable — the table stays
-            # registered, reads surface the recorded reason
-            self.unreadable_tables[table.name] = str(e)
+            # registered without a view, and a read fails as not found
+            logger.debug("connector table %r has no reader: %s", table.name, e)
+
+    def drop_connector_table(self, name: str) -> bool:
+        """Forget ``name`` everywhere a drop must reach: the connector
+        registry and its DDL, its temp view, and EVERY emulated
+        catalog's browse set (the same name may be listed under several
+        databases after re-CREATEs). DROP TABLE / VIEW, the CTAS
+        rollback, DROP CATALOG and DROP DATABASE … CASCADE all forget a
+        table through here. True iff a registry entry or a temp view
+        existed."""
+        existed = self.connector_tables.pop(name, None) is not None
+        self.connector_ddl.pop(name, None)
+        existed = self.spark.catalog.dropTempView(name) or existed
+        for cat in self.emulated_catalogs.catalogs.values():
+            for db in cat.databases.values():
+                db.tables.discard(name)
+        self.metadata.invalidate()
+        return existed
 
     def refresh_connector_views(self) -> None:
         # snapshot: this now also runs on async submit worker threads

@@ -331,18 +331,10 @@ def dialect_constructs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14-style promo revenue share — broadcast part, exact
-    decimal conditional aggregation. Scale-adaptive form (r15, see
-    relational._two_level): one month of lineitem is far too few rows
-    at bench scale to amortize the two-level's extra exchange (r14
-    paired A/B +52%, 0/7 pairs) — but its group sum grows with the
-    corpus, so past the crossover the per-row work goes unscaled-long
-    with BIGINT partials per partition and an exact decimal merge.
-    Both forms bit-identical (test_decimal_width_equivalence)."""
+    decimal conditional aggregation."""
     from pyspark.sql import functions as F  # noqa: PLC0415
 
     from flink_sql_toolkit_spark.operators.relational import (  # noqa: PLC0415
-        REV_U4,
-        _two_level,
         revenue_col,
     )
 
@@ -352,30 +344,6 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     part = load_table(spark, sf_dir, "part")
     joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-    # fraction 0.012: q14's one-month ship window keeps 1.2% of
-    # lineitem (measured at sf0.1, sf-invariant)
-    if _two_level(spark, sf_dir, 0.012):
-        partials = joined.groupBy(
-            F.spark_partition_id().alias("_pid")
-        ).agg(
-            F.expr(
-                f"SUM(CASE WHEN p_type LIKE 'PROMO%' THEN {REV_U4} "
-                "ELSE 0L END) AS _p"
-            ),
-            F.expr(f"SUM({REV_U4}) AS _r"),
-            F.expr("COUNT(1) AS _n"),
-        )
-        merge = (
-            "CAST(CAST(SUM(CAST({c} AS DECIMAL(27,0))) AS DECIMAL(38,0))"
-            " / 10000 AS DOUBLE)"
-        )
-        return partials.agg(
-            F.expr(
-                f"CAST(100.0 AS DOUBLE) * {merge.format(c='_p')}"
-                f" / {merge.format(c='_r')} AS promo_revenue_pct"
-            ),
-            F.expr("COALESCE(SUM(_n), 0) AS n"),
-        )
     zero = F.lit(0).cast("decimal(18,4)")
     promo = F.when(F.col("p_type").like("PROMO%"), revenue_col()).otherwise(zero)
     return joined.agg(

@@ -20,8 +20,6 @@ Scale notes (100 TB design intent, verified on the local plans):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -185,35 +183,6 @@ _ONE_PLUS_TAX = "CAST(1 AS DECIMAL(5,4)) + CAST(l_tax AS DECIMAL(5,4))"
 REV_U4 = _half_up_div(_u4(_MONEY10) + " * " + _u4(_ONE_MINUS_DISC), 4)
 
 
-# Crossover for the q5/q6/q14 two-level unscaled-long forms (r15,
-# VERDICT r14 ask #5): their group sums grow with the corpus, so
-# single-level long would overflow at 100 TB, and below the crossover
-# the two-level's extra (tiny) exchange + second stage cost more than
-# the per-row BigDecimal they remove. Measured (r15 isolated paired
-# sweep, q6-shaped sum over localCheckpointed input on local[32]):
-# 1.19× SLOWER at 2M summed rows, 0.83× at 10M, 0.66× at 50M — the
-# crossover sits at ~5-8M rows actually entering the SUM. The r14
-# sf0.1 paired A/Bs (+24-52%, filtered counts 1.5k-20k rows) and the
-# r15 sf1 A/B (+9-23%, 0-1/7 wins, filtered counts 15k-200k) are the
-# same curve's left side. The switch is therefore INPUT-SIZE-adaptive
-# in SUMMED rows (guide §2 — derive from input size, not a constant):
-# each caller passes its measured filtered-rows fraction of lineitem
-# (sf-invariant — the filters are fixed date/rate windows), and the
-# two-level form engages once rows×fraction clears the crossover
-# with margin. Both forms are proven bit-identical on the fixtures
-# (test_decimal_width_equivalence pins them, forcing each side).
-TWO_LEVEL_MIN_SUMMED_ROWS = int(
-    os.environ.get("SPARK_GRAFT_TWOLEVEL_MIN_SUMMED", "8000000")
-)
-
-
-def _two_level(spark: SparkSession, sf_dir: str, fraction: float = 1.0) -> bool:
-    from flink_sql_toolkit_spark.tables import table_rows  # noqa: PLC0415
-
-    rows = table_rows(spark, sf_dir, "lineitem") * fraction
-    return rows >= TWO_LEVEL_MIN_SUMMED_ROWS
-
-
 def _money_merge(part: str, pow10: int, alias: str) -> Column:
     """Two-level merge: exact decimal sum of unscaled-long partials,
     exact decimal division, ONE decimal→double rounding."""
@@ -329,29 +298,6 @@ def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_discount") <= 0.07)
         & (F.col("l_quantity") < 24)
     )
-    # scale-adaptive aggregation form (see _two_level): q6's group sum
-    # grows with the corpus, so single-level LONG would overflow at
-    # 100 TB — past the crossover the per-row work goes unscaled-long
-    # with BIGINT partials per partition and an exact decimal merge
-    # across a 1-row-per-partition second exchange; below it the r13
-    # single-level decimal form stays. Fraction 0.03: q6's fixed
-    # date/discount/quantity window keeps 3.4% of lineitem (measured
-    # at sf0.1, sf-invariant), so the sum sees ≥ the ~8M-row crossover
-    # from ~270M lineitem rows.
-    if _two_level(spark, sf_dir, 0.03):
-        revdisc_u4 = _half_up_div(
-            _u4(_MONEY10) + " * " + _u4(f"CAST(l_discount AS {RATE_DEC})"), 4
-        )
-        partials = filtered.groupBy(
-            F.spark_partition_id().alias("_pid")
-        ).agg(
-            F.expr(f"SUM({revdisc_u4}) AS _r"),
-            F.expr("COUNT(1) AS _n"),
-        )
-        return partials.agg(
-            _money_merge("_r", 4, "revenue"),
-            F.expr("COALESCE(SUM(_n), 0) AS n_rows"),
-        )
     return filtered.agg(
         F.sum((dec("l_extendedprice") * dec("l_discount")).cast("decimal(18,4)"))
         .cast("double")
@@ -467,20 +413,6 @@ def q5_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
     )
-    # scale-adaptive aggregation form (see _two_level / the q6 note):
-    # q5's per-nation sum grows with the corpus — two-level
-    # unscaled-long past the crossover (BIGINT partials per
-    # (n_name, partition), exact decimal merge over a
-    # #nations×#partitions-row exchange), r13 single-level decimal
-    # below it. Fraction 0.0025: the ASIA-region star join keeps
-    # 0.25% of lineitem (measured at sf0.1, sf-invariant).
-    if _two_level(spark, sf_dir, 0.0025):
-        partials = joined.groupBy(
-            "n_name", F.spark_partition_id().alias("_pid")
-        ).agg(F.expr(f"SUM({REV_U4}) AS _r"))
-        return partials.groupBy("n_name").agg(
-            _money_merge("_r", 4, "revenue")
-        )
     return joined.groupBy("n_name").agg(
         F.sum(revenue_col()).cast("double").alias("revenue")
     )

@@ -34,6 +34,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flink_sql_toolkit_spark.commands import OK
 from flink_sql_toolkit_spark.dialect.rewriter import (
     _mask,
     _split_args,
@@ -744,7 +745,7 @@ def compact_table(sess, name: str, partition_text: str | None):
         sub = df.filter(cond)
         parts = [tuple(r) for r in sub.select(*pcols).distinct().collect()]
         if not parts:  # empty partition: nothing to compact
-            return [{"name": "result", "logicalType": "string"}], [["OK"]]
+            return OK
         if _prunable(table, parts):
             if not table.distributed_by and table.bucket_count is None:
                 # the swap re-buckets DISTRIBUTED BY tables itself;
@@ -753,7 +754,7 @@ def compact_table(sess, name: str, partition_text: str | None):
                 sub = sub.repartition(*[F.col(c) for c in pcols])
             _cow_swap_partitions(spark, table, sub, parts)
             sess.refresh_connector_views()
-            return [{"name": "result", "logicalType": "string"}], [["OK"]]
+            return OK
         # partition value whose hive directory name cannot be derived
         # exactly (timestamps, floats, escaped strings): fall back to
         # the full-table compact — correct, just not partition-scoped
@@ -770,7 +771,7 @@ def compact_table(sess, name: str, partition_text: str | None):
         df = df.repartition(target)
     _cow_swap(spark, table, df)
     sess.refresh_connector_views()
-    return [{"name": "result", "logicalType": "string"}], [["OK"]]
+    return OK
 
 
 _BYTE_SUFFIX = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}

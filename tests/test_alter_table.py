@@ -301,3 +301,26 @@ class TestSecondReviewRegressions:
         assert "TO_TIMESTAMP_LTZ(f(a, b), 9)" in rewrite(
             "SELECT TO_TIMESTAMP_LTZ(f(a, b), 9) FROM t"
         )
+
+
+class TestRenameTable:
+    def test_rename_unreadable_connector_table(self, sess, tmp_path):
+        """A filesystem table whose path has no files has no reader
+        view. RENAME TO must still move it whole: it used to raise
+        table-not-found after the registry already listed the new
+        name."""
+        run(sess, f"CREATE TABLE ur (id BIGINT) WITH ('connector'='filesystem',"
+                  f" 'path'='{tmp_path}/nothing_here', 'format'='parquet')")
+        assert run(sess, "ALTER TABLE ur RENAME TO ur2") == [["OK"]]
+        shown = {r[0] for r in run(sess, "SHOW TABLES")}
+        assert "ur2" in shown and "ur" not in shown
+        assert run(sess, "DROP TABLE ur2") == [["OK"]]
+        assert "ur2" not in sess.connector_tables
+
+    def test_rename_readable_connector_table_moves_rows(self, sess, fs_table):
+        run(sess, "ALTER TABLE alt_t RENAME TO alt_t2")
+        assert run(sess, "SELECT k, v FROM alt_t2") == [[1, "a"]]
+        assert "alt_t2" in run(sess, "SHOW CREATE TABLE alt_t2")[0][0]
+        with pytest.raises(Exception, match="alt_t"):
+            run(sess, "SELECT * FROM alt_t")
+        run(sess, "DROP TABLE alt_t2")

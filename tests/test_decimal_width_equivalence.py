@@ -167,27 +167,3 @@ def test_half_up_div_negative_rounds_away_from_zero(spark):
         )
     ).collect()[0]
     assert list(rows) == [2, -2, 1, -1, 1, -1, 0]
-
-
-def test_q5_q6_q14_two_level_bit_identical(spark, sf_dir):
-    """r15 (VERDICT r14 ask #5): the scale-adaptive two-level
-    unscaled-long forms of q5/q6/q14 must be bit-identical to the r13
-    single-level decimal forms on the fixtures — forcing the
-    crossover both ways and comparing collected rows exactly."""
-    from flink_sql_toolkit_spark.operators import dialect_queries as DQ  # noqa: PLC0415
-    from flink_sql_toolkit_spark.operators import relational as R  # noqa: PLC0415
-
-    saved = R.TWO_LEVEL_MIN_SUMMED_ROWS
-    try:
-        for fn in (
-            R.q5_regional_revenue,
-            R.q6_revenue_forecast,
-            DQ.q14_promo_revenue,
-        ):
-            R.TWO_LEVEL_MIN_SUMMED_ROWS = 10**18  # force single-level
-            single = sorted(map(tuple, fn(spark, sf_dir).collect()))
-            R.TWO_LEVEL_MIN_SUMMED_ROWS = 1  # force two-level
-            two = sorted(map(tuple, fn(spark, sf_dir).collect()))
-            assert single == two and len(single) > 0, fn.__name__
-    finally:
-        R.TWO_LEVEL_MIN_SUMMED_ROWS = saved

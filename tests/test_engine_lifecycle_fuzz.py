@@ -178,7 +178,7 @@ def test_drop_unreadable_connector_table(spark, tmp_path):
     a temp view (quarantined as unreadable) — DROP TABLE must still
     succeed cleanly (it used to remove the registry entry AND raise
     'not found' — found by the lifecycle fuzz, r11), a second DROP
-    raises the typed not-found, and the unreadable marker is gone."""
+    raises the typed not-found, and SHOW TABLES omits the table."""
     engine = Engine(spark)
     sess = engine.open_session("drop-unreadable")
     try:
@@ -187,11 +187,9 @@ def test_drop_unreadable_connector_table(spark, tmp_path):
             f"('connector'='filesystem', 'path'='{tmp_path}/nothing_here', "
             f"'format'='parquet')"
         )
-        assert "dr_unread" in sess.unreadable_tables
         op = sess.execute_statement("DROP TABLE dr_unread")
         assert op.fetch(0)["data"] == [["OK"]]
         assert "dr_unread" not in sess.connector_tables
-        assert "dr_unread" not in sess.unreadable_tables
         shown = {
             r[0]
             for r in sess.execute_statement("SHOW TABLES").fetch(0)["data"]
