@@ -241,8 +241,7 @@ def main() -> None:
         from flink_sql_toolkit_spark import tables as _tables  # noqa: PLC0415
 
         _tables.HOT_CACHE_BUDGET_BYTES = 0
-        _tables._PLAN_CACHE.clear()
-        _tables._CACHE_SPEND.clear()
+        _tables.clear()  # plans, persisted copies AND similarity models
         spark.catalog.clearCache()
         for name in HEADLINE:
             if name not in queries:

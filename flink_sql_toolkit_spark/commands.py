@@ -798,6 +798,12 @@ def handle_alter(session: "EngineSession", stmt: str) -> tuple[Cols, Rows] | Non
     m = re.match(r"(?is)^ALTER\s+TABLE\s+([\w`]+)\s+RENAME\s+TO\s+([\w`]+)\s*;?\s*$", stmt)
     if m:
         old, new = m.group(1).strip("`"), m.group(2).strip("`")
+        # Flink rejects a rename onto an existing table; check before
+        # anything changes, so a rejected rename leaves both intact
+        if old in session.connector_tables and (
+            new in session.connector_tables or session.spark.catalog.tableExists(new)
+        ):
+            raise ValueError(f"table '{new}' already exists")
         session.metadata.invalidate()  # listings + both names' columns stale
         table = session.connector_tables.pop(old, None)
         if table is None:

@@ -818,6 +818,7 @@ def _write(
             query_name=name,
             checkpoint=ckpt,
             trigger_interval=sess.trigger_interval(),
+            overwrite=overwrite,
         )
 
     try:

@@ -1010,15 +1010,24 @@ def _jdbc_props(opts: dict[str, str]) -> dict[str, str]:
     return props
 
 
-def build_writer(df: DataFrame, table: ConnectorTable, *, query_name: str, checkpoint: str, trigger_interval: str | None = None):
+def build_writer(df: DataFrame, table: ConnectorTable, *, query_name: str, checkpoint: str, trigger_interval: str | None = None, overwrite: bool = False):
     """Write ``df`` into the connector table.
 
     Streaming df → returns the started StreamingQuery; batch df →
-    performs the write and returns None.
+    performs the write and returns None. ``overwrite`` (INSERT
+    OVERWRITE) replaces the table's data — or, for a partitioned
+    table, the partitions the query writes; as in Flink, only a batch
+    write into a filesystem table supports it.
     """
     conn = table.connector
     opts = table.options
     streaming = df.isStreaming
+    if overwrite and (streaming or conn != "filesystem"):
+        raise ValueError(
+            "INSERT OVERWRITE is supported only in batch mode, into a "
+            f"filesystem table ('{table.name}' is {conn}"
+            f"{', streaming' if streaming else ''})"
+        )
 
     if table.columns and len(df.columns) == len(table.columns):
         # ANSI/Flink INSERT is positional: align the query's output onto
@@ -1049,6 +1058,13 @@ def build_writer(df: DataFrame, table: ConnectorTable, *, query_name: str, check
         return None
     if conn == "filesystem":
         fmt, path = table.format, opts["path"]
+        if overwrite and not table.partitioned_by:
+            # staged, then swapped in: Spark's static overwrite deletes
+            # the target before the query, which may read it, has run
+            from flink_sql_toolkit_spark.sources.dml import _cow_swap  # noqa: PLC0415
+
+            _cow_swap(df.sparkSession, table, df)
+            return None
         df = _apply_distribution(df, table, streaming)
         # the csv WRITE dialect must match the declared READ dialect on
         # every writer (INSERT INTO here, the COW rewrites in dml.py) —
@@ -1060,9 +1076,11 @@ def build_writer(df: DataFrame, table: ConnectorTable, *, query_name: str, check
             if table.partitioned_by:
                 w = w.partitionBy(*table.partitioned_by)
             return _start(w, query_name, checkpoint, trigger_interval)
-        w = df.write.format(fmt).mode("append").options(**fmt_opts)
+        w = df.write.format(fmt).mode("overwrite" if overwrite else "append").options(**fmt_opts)
         if table.partitioned_by:
-            w = w.partitionBy(*table.partitioned_by)
+            # dynamic OVERWRITE replaces only the partitions the query
+            # writes, and only at commit, after the query has run
+            w = w.partitionBy(*table.partitioned_by).option("partitionOverwriteMode", "dynamic")
         w.save(path)
         return None
     if conn in ("kafka", "upsert-kafka"):

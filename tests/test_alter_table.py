@@ -324,3 +324,19 @@ class TestRenameTable:
         with pytest.raises(Exception, match="alt_t"):
             run(sess, "SELECT * FROM alt_t")
         run(sess, "DROP TABLE alt_t2")
+
+    def test_rename_onto_existing_table_rejected(self, sess, fs_table, tmp_path):
+        """Flink rejects a rename onto an existing table. It used to
+        answer OK and silently point `alt_t` at `other`'s path; now it
+        raises before touching the registry, so both tables keep their
+        own rows."""
+        run(sess, f"CREATE TABLE other (k INT, v STRING) WITH ('connector'="
+                  f"'filesystem', 'path'='{tmp_path}/other', 'format'='parquet')")
+        run(sess, "INSERT INTO other VALUES (2, 'b')")
+        with pytest.raises(ValueError, match="'alt_t' already exists"):
+            run(sess, "ALTER TABLE other RENAME TO alt_t")
+        assert run(sess, "SELECT k, v FROM alt_t") == [[1, "a"]]
+        assert run(sess, "SELECT k, v FROM other") == [[2, "b"]]
+        assert sess.connector_tables["alt_t"].options["path"] == fs_table
+        run(sess, "DROP TABLE other")
+        run(sess, "DROP TABLE alt_t")

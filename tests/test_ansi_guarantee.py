@@ -63,12 +63,12 @@ def test_without_ansi_the_same_value_is_silently_wrong(spark, tmp_path):
     rather than relying on the Spark 4 default."""
     sf_dir = _out_of_domain_lineitem(spark, tmp_path)
     from flink_sql_toolkit_spark.operators.relational import q1_pricing_summary
-    from flink_sql_toolkit_spark.tables import invalidate_table
+    from flink_sql_toolkit_spark.tables import clear
 
     spark.conf.set("spark.sql.ansi.enabled", "false")
     try:
         # drop the cached plan so the re-read happens under ANSI-off
-        invalidate_table(sf_dir, "lineitem")
+        clear()
         rows = q1_pricing_summary(spark, sf_dir).collect()
         # no exception: the out-of-domain price flowed through; the
         # narrow cast produced NULL and the sum silently dropped it
@@ -76,4 +76,4 @@ def test_without_ansi_the_same_value_is_silently_wrong(spark, tmp_path):
         assert rows[0].sum_base_price is None or rows[0].sum_base_price != pytest.approx(2_000_000.0)
     finally:
         spark.conf.set("spark.sql.ansi.enabled", "true")
-        invalidate_table(sf_dir, "lineitem")
+        clear()

@@ -294,6 +294,61 @@ def test_merge_subquery_source_and_insert_star(session, tmp_path):
     assert _fetch_all(session, t)[-1] == (9, "z", 9.0)
 
 
+def test_insert_overwrite_replaces_rows(session, tmp_path):
+    """INSERT OVERWRITE into a filesystem table replaces its rows; it
+    used to append (VALUES (1),(2) then OVERWRITE VALUES (3) read back
+    [1, 2, 3])."""
+    session.execute_statement("SET 'execution.runtime-mode'='batch'")
+    session.execute_statement(
+        f"CREATE TABLE ow_t (x INT) WITH ('connector'='filesystem', "
+        f"'path'='{tmp_path / 'ow_t'}', 'format'='parquet')"
+    )
+    session.execute_statement("INSERT INTO ow_t VALUES (1), (2)")
+    session.execute_statement("INSERT OVERWRITE ow_t VALUES (3)")
+    rows = session.execute_statement("SELECT x FROM ow_t").fetch()["data"]
+    assert [r[0] for r in rows] == [3]
+    # a query that reads its own target runs before the old rows go
+    session.execute_statement("INSERT OVERWRITE ow_t SELECT x + 10 FROM ow_t")
+    rows = session.execute_statement("SELECT x FROM ow_t").fetch()["data"]
+    assert [r[0] for r in rows] == [13]
+
+
+def test_insert_overwrite_partitioned_keeps_other_partitions(session, tmp_path):
+    """On a partitioned table, as in Flink, OVERWRITE replaces only the
+    partitions the query writes."""
+    session.execute_statement("SET 'execution.runtime-mode'='batch'")
+    session.execute_statement(
+        f"CREATE TABLE ow_p (x INT, p INT) PARTITIONED BY (p) WITH "
+        f"('connector'='filesystem', 'path'='{tmp_path / 'ow_p'}', 'format'='parquet')"
+    )
+    session.execute_statement("INSERT INTO ow_p VALUES (1, 1), (2, 2), (3, 2)")
+    session.execute_statement("INSERT OVERWRITE ow_p VALUES (4, 2)")
+    rows = session.execute_statement("SELECT x, p FROM ow_p ORDER BY x").fetch()["data"]
+    assert [tuple(r) for r in rows] == [(1, 1), (4, 2)]
+    session.execute_statement("INSERT OVERWRITE ow_p SELECT x + 10, p FROM ow_p WHERE p = 2")
+    rows = session.execute_statement("SELECT x, p FROM ow_p ORDER BY x").fetch()["data"]
+    assert [tuple(r) for r in rows] == [(1, 1), (14, 2)]
+
+
+def test_insert_overwrite_rejected_when_streaming_or_not_filesystem(session, tmp_path):
+    """Flink supports INSERT OVERWRITE in batch mode, into sinks that
+    can overwrite (the filesystem connector here) only."""
+    session.execute_statement(
+        "CREATE TABLE ow_src (x INT) WITH ('connector'='datagen', 'rows-per-second'='5')"
+    )
+    session.execute_statement(
+        f"CREATE TABLE ow_fs (x INT) WITH ('connector'='filesystem', "
+        f"'path'='{tmp_path / 'ow_fs'}', 'format'='parquet')"
+    )
+    with pytest.raises(ValueError, match="only in batch mode.*streaming"):
+        session.execute_statement("INSERT OVERWRITE ow_fs SELECT x FROM ow_src")
+    assert not session.jobs.list()
+    session.execute_statement("SET 'execution.runtime-mode'='batch'")
+    session.execute_statement("CREATE TABLE ow_bh (x INT) WITH ('connector'='blackhole')")
+    with pytest.raises(ValueError, match="'ow_bh' is blackhole"):
+        session.execute_statement("INSERT OVERWRITE ow_bh VALUES (1)")
+
+
 def test_dml_rejected_on_non_filesystem(session):
     session.execute_statement(
         "CREATE TABLE dml_bh (id BIGINT) WITH ('connector'='blackhole')"

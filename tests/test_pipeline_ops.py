@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import math
+import os
+
 from pyspark.sql import functions as F
 
 from flink_sql_toolkit_spark.operators.dedup import (
@@ -259,31 +262,6 @@ def test_large_query_set_not_broadcast(spark, sf_dir, monkeypatch):
     assert a == b == c
 
 
-def test_dot_pandas_kernel_matches_fold(spark):
-    """The high-dim Arrow/numpy dot kernel must agree with the JVM
-    fold to float64 round-off (same inputs, both sum the same
-    products; einsum may reassociate — tolerance 1e-9 relative)."""
-    import random
-
-    from flink_sql_toolkit_spark.operators.similarity import dot
-
-    rng = random.Random(7)
-    dim = 512
-    rows = [
-        (i, [rng.uniform(-1, 1) for _ in range(dim)], [rng.uniform(-1, 1) for _ in range(dim)])
-        for i in range(50)
-    ]
-    df = spark.createDataFrame(rows, "id long, a array<double>, b array<double>")
-    fold = {r.id: r.d for r in df.select("id", dot(F.col("a"), F.col("b")).alias("d")).collect()}
-    fast = {
-        r.id: r.d
-        for r in df.select("id", dot(F.col("a"), F.col("b"), dim=dim).alias("d")).collect()
-    }
-    assert fold.keys() == fast.keys()
-    for k in fold:
-        assert abs(fold[k] - fast[k]) <= 1e-9 * max(1.0, abs(fold[k]))
-
-
 def test_ivf_bucketed_layout_joins_without_corpus_shuffle(spark, sf_dir):
     """SCALE.md's serving-layout claim, plan-asserted: with the
     inverted lists bucketed by cluster_id, the cell-probe join needs
@@ -538,6 +516,116 @@ def test_ivf_model_caches_invalidate_on_corpus_write(spark, tmp_path):
     assert k2 == 45
     # assignments see the grown corpus (stale plan/persist dropped)
     assert sim.ivf_assignments(spark, d).count() == 2000
+
+
+def _count_live_broadcasts(sc, monkeypatch) -> list[int]:
+    """Wrap ``sc.broadcast``; the returned one-element list holds the
+    broadcasts created minus those destroyed."""
+    live = [0]
+    make = sc.broadcast
+
+    def counted(value):
+        b = make(value)
+        live[0] += 1
+        destroy = b.destroy
+
+        def counted_destroy(*a, **kw):
+            live[0] -= 1
+            return destroy(*a, **kw)
+
+        b.destroy = counted_destroy
+        return b
+
+    monkeypatch.setattr(sc, "broadcast", counted)
+    return live
+
+
+def test_explicit_queries_share_one_broadcast(spark, sf_dir, monkeypatch):
+    """50 brute-force builds over the same explicit query set create
+    ONE broadcast: the query matrix is collected and broadcast once per
+    (query plan, corpus fingerprint). It used to leak a fresh
+    broadcast per build."""
+    from flink_sql_toolkit_spark import tables
+    from flink_sql_toolkit_spark.operators import similarity as sim
+
+    tables.clear()
+    live = _count_live_broadcasts(spark.sparkContext, monkeypatch)
+    q = (
+        tables.load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") % sim.QUERY_MOD == 0)
+        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
+    )
+    frames = [sim.sim_topk_bruteforce(spark, sf_dir, queries=q) for _ in range(50)]
+    assert live[0] == 1
+    # the explicit set is the fixture slice, so the results agree
+    fixture = {tuple(r) for r in sim.sim_topk_bruteforce(spark, sf_dir).collect()}
+    assert {tuple(r) for r in frames[-1].collect()} == fixture
+    tables.clear()
+    assert live[0] == 0
+
+
+def test_explicit_queries_follow_a_rewritten_query_file(spark, sf_dir, tmp_path):
+    """Two scans of one path have the same plan hash, so the stored
+    broadcast is keyed by the query files' stat as well: a query file
+    rewritten in place is read again, not served from the old
+    broadcast."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from flink_sql_toolkit_spark.operators import similarity as sim
+
+    emb = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+    path = str(tmp_path / "q.parquet")
+
+    def query_ids(ids: list[int]) -> list[int]:
+        t = emb.filter(pc.is_in(emb["vec_id"], pa.array(ids, emb["vec_id"].type)))
+        pq.write_table(pa.table({"query_id": t["vec_id"], "qv": t["embedding"]}), path)
+        q = spark.read.parquet(path)
+        return sorted({r.query_id for r in sim.sim_topk_bruteforce(spark, sf_dir, queries=q).collect()})
+
+    assert query_ids([0, 50]) == [0, 50]
+    assert query_ids([100, 150, 200]) == [100, 150, 200]
+
+
+def test_corpus_rewrites_keep_only_current_model_entries(spark, sf_dir, tmp_path, monkeypatch):
+    """After three rewrites of the embeddings table, the store holds
+    the derived models (query matrix, dim, row count, anchors,
+    centroids, broadcasts) for the current fingerprint only, and the
+    stale broadcasts are destroyed. Each model dict used to keep one
+    entry per fingerprint ever seen."""
+    import duckdb
+
+    from flink_sql_toolkit_spark import tables
+    from flink_sql_toolkit_spark.operators import similarity as sim
+
+    tables.clear()
+    live = _count_live_broadcasts(spark.sparkContext, monkeypatch)
+    src = os.path.join(sf_dir, "embeddings.parquet")
+    d = str(tmp_path)
+    dst = tmp_path / "embeddings.parquet"
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE t AS SELECT * FROM '{src}'")
+    for copies in (1, 2, 3, 4):  # the initial write, then three rewrites
+        union = " UNION ALL ".join(
+            f"SELECT vec_id + {i * 10_000_000} AS vec_id, embedding, label FROM t"
+            for i in range(copies)
+        )
+        con.execute(f"COPY ({union}) TO '{dst}' (FORMAT PARQUET)")
+        n = sim.sim_lsh_bucketed(spark, d).count()
+        assert n > 0
+        sim.sim_topk_bruteforce(spark, d)
+        sim.sim_ivf_topk(spark, d)
+        assert sim._ivf_k(spark, d) == max(4, min(256, math.ceil(math.sqrt(500 * copies))))
+    con.close()
+    current = tables.fingerprint(d, "embeddings")
+    keys = [
+        k for k in tables._STORE[spark] if k[0] == (os.path.abspath(d), "embeddings")
+    ]
+    assert {k[2] for k in keys} >= {"plan", "rows", "qmat", "dim", "anchors", "centroids", "bcast"}
+    assert all(k[1] == current for k in keys)
+    assert live[0] == 3  # topk, lsh and ivf, for the current corpus only
+    tables.clear()
 
 
 def test_assign_split_deterministic_and_proportional(spark, sf_dir):

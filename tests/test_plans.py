@@ -21,12 +21,10 @@ def cold_scans(spark, monkeypatch):
     into matching sub-plans session-wide, which would hide the scan
     the assertions inspect)."""
     monkeypatch.setattr(tables, "HOT_CACHE_BUDGET_BYTES", 0)
-    tables._PLAN_CACHE.pop(spark, None)
-    tables._CACHE_SPEND.pop(spark, None)
+    tables.clear()
     spark.catalog.clearCache()
     yield
-    tables._PLAN_CACHE.pop(spark, None)
-    tables._CACHE_SPEND.pop(spark, None)
+    tables.clear()
 
 
 def plan_of(spark, sf_dir, name: str) -> str:
