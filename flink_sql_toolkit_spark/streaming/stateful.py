@@ -9,30 +9,38 @@ Also maps Flink's streaming dedup idiom to
 ``dropDuplicatesWithinWatermark`` (keep-first per key inside the
 watermark horizon).
 
+Every operator here runs in one per-key shell, ``_keyed_state``:
+the operator supplies its state fields and a step over a key's rows
+of one micro-batch; the shell owns reading and writing the state,
+the event-time gate below, the TTL and the timers.
+
 Semantic note (mirrors SURVEY §7): by default rows are processed in
-arrival order within each micro-batch (sorted by event time inside
-the batch); cross-batch out-of-order rows are not re-buffered. Since
-r7 the ``reorder_wm_col`` option on MATCH_RECOGNIZE / first-N / OVER
-ROWS / LAG closes this gap (VERDICT r6 ask #3): rows buffer in state
-until the query's event-time watermark passes them, then enter the
-operator in event-time order — Flink's CEP event-time buffer — with
-EventTimeTimeout draining held rows for keys that go quiet. Like
-Flink on an unbounded stream, rows inside the final watermark window
-stay held until the watermark advances past them (bounded-input runs
-don't fabricate a +inf watermark). OVER RANGE needs no gate: it
-already computes exact event-time frames for in-horizon late rows.
+arrival order across micro-batches, sorted by the operator's ORDER
+BY inside each one — all of a key's Arrow chunks are concatenated
+and sorted once, so the order holds however many chunks the key
+spans; cross-batch out-of-order rows are not re-buffered. Since r7
+the ``reorder_wm_col`` option on MATCH_RECOGNIZE / first-N / OVER
+ROWS / LAG / LEAD / NTH_VALUE / rank closes this gap (VERDICT r6 ask
+#3): rows buffer in state until the query's event-time watermark
+passes them, then enter the operator in event-time order — Flink's
+CEP event-time buffer — with EventTimeTimeout draining held rows for
+keys that go quiet. Like Flink on an unbounded stream, rows inside
+the final watermark window stay held until the watermark advances
+past them (bounded-input runs don't fabricate a +inf watermark).
+OVER RANGE needs no gate: it already computes exact event-time
+frames for in-horizon late rows.
 """
 
 from __future__ import annotations
 
 import math
+import pickle
 import re
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 # -- state layout versioning (VERDICT r13 ask #2) --------------------
@@ -41,7 +49,7 @@ from pyspark.sql import functions as F
 # build that reinterprets same-typed fields — or changes what a
 # pickled blob contains — would silently corrupt a job resumed from
 # an older savepoint. Every operator's state tuple therefore carries
-# a leading ``sv int`` written by ``_apply_with_state``; reading a
+# a leading ``sv int`` written by ``_keyed_state``; reading a
 # tuple with a different version raises a typed error telling the
 # user to restart without the savepoint instead of computing garbage.
 # BUMP THIS whenever any operator's state-tuple INTERPRETATION
@@ -88,18 +96,6 @@ class _VersionedState:
         return getattr(self._s, name)
 
 
-def _apply_with_state(grouped, fn, out_schema, state_schema, mode, timeout):
-    """``applyInPandasWithState`` with the version-tagged state layout
-    (every stateful operator routes through here)."""
-
-    def wrapped(key, pdfs, state):
-        return fn(key, pdfs, _VersionedState(state))
-
-    return grouped.applyInPandasWithState(
-        wrapped, out_schema, f"sv int, {state_schema}", mode, timeout
-    )
-
-
 def streaming_dedup(df: DataFrame, keys: list[str], watermark_col: str, delay: str) -> DataFrame:
     """Keep-first-per-key within the watermark horizon — the Flink
     ``ROW_NUMBER() = 1`` streaming dedup pattern."""
@@ -129,8 +125,20 @@ def watermark_column(df: DataFrame) -> str | None:
     return None
 
 
+def _concat(frames: list[pd.DataFrame]) -> pd.DataFrame | None:
+    """One frame from ``frames`` (None for an empty list)."""
+    if not frames:
+        return None
+    return pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
+
+
+def _blob(obj) -> bytearray:
+    """A pickled state field (``binary`` in the state struct)."""
+    return bytearray(pickle.dumps(obj))
+
+
 def _reorder_release(
-    held_blob, chunks: list[pd.DataFrame], wm_col: str, wm_ms: int
+    held: pd.DataFrame | None, chunks: list[pd.DataFrame], wm_col: str, wm_ms: int
 ) -> tuple[pd.DataFrame | None, pd.DataFrame | None, int]:
     """Event-time reorder gate (VERDICT r6 ask #3, closing the
     module-level arrival-order note for the gated operators): hold
@@ -146,18 +154,12 @@ def _reorder_release(
     progress yet) holds everything and drops nothing. Rows with a
     NULL ``wm_col`` have no event time and are dropped. Returns
     ``(released, still_held, n_late_dropped)``."""
-    import pickle  # noqa: PLC0415
-
-    if isinstance(held_blob, pd.DataFrame):
-        held: pd.DataFrame | None = held_blob  # MR passes the frame directly
-    else:
-        held = pickle.loads(bytes(held_blob)) if held_blob is not None else None
     dropped = 0
     parts: list[pd.DataFrame] = []
     if held is not None and len(held):
         parts.append(held)
-    if chunks:
-        new = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
+    new = _concat(chunks)
+    if new is not None:
         with_ts = new[new[wm_col].notna()]
         dropped += len(new) - len(with_ts)
         if wm_ms > 0:
@@ -169,10 +171,7 @@ def _reorder_release(
             parts.append(with_ts)
     if not parts:
         return None, None, dropped
-    allr = (
-        pd.concat(parts, ignore_index=True) if len(parts) > 1 else
-        parts[0].reset_index(drop=True)
-    )
+    allr = _concat(parts).reset_index(drop=True)
     if wm_ms <= 0:
         return None, allr, dropped
     rel_mask = allr[wm_col] <= pd.Timestamp(wm_ms, unit="ms")
@@ -211,6 +210,161 @@ def _held_ts_ms(held: pd.DataFrame | None, wm_col: str) -> int | None:
     return int(pd.Timestamp(held[wm_col].min()).value // 1_000_000)
 
 
+def _held_codec(reorder: bool) -> tuple[Callable, Callable]:
+    """The default ``(decode, encode)`` pair between the stored state
+    tuple and ``(held rows, operator fields)``: with reorder the held
+    rows lead the tuple as one pickled ``held binary`` field, without
+    it there are none and the tuple is the operator's own."""
+    if not reorder:
+        return (lambda stored: (None, stored)), (lambda _held, st: st)
+
+    def decode(stored: tuple) -> tuple:
+        return pickle.loads(bytes(stored[0])), stored[1:]
+
+    def encode(held: pd.DataFrame | None, st: tuple) -> tuple:
+        return (_blob(held), *st)
+
+    return decode, encode
+
+
+def _keyed_state(
+    df: DataFrame,
+    keys: list[str],
+    out_schema: str,
+    state_schema: str,
+    init: tuple,
+    step: Callable,
+    *,
+    op: str,
+    order_by: list[str] | None = None,
+    ttl_ms: int | None = None,
+    reorder_wm_col: str | None = None,
+    late_acc=None,
+    codec: tuple[Callable, Callable] | None = None,
+    on_expire: Callable | None = None,
+) -> DataFrame:
+    """The per-key shell every stateful operator runs in: one
+    ``applyInPandasWithState`` over ``df`` grouped by ``keys``, with
+    the version-tagged state layout (``_VersionedState``).
+
+    An operator supplies its state fields (``state_schema``, their
+    ``init`` tuple) and ``step(key, fields, rows) -> (fields, out)``,
+    which sees a key's rows of one micro-batch at once: every
+    non-empty Arrow chunk concatenated and, given ``order_by``,
+    stably sorted once (so a key larger than
+    ``arrow.maxRecordsPerBatch`` orders like a small one). ``out``
+    is a frame or None; empty output is not emitted. ``step`` is not
+    called when no rows reach it.
+
+    The shell owns everything else:
+
+    - with ``reorder_wm_col``, the event-time gate
+      (``_reorder_release``): rows held in state until the watermark
+      passes them, late drops tallied on ``late_acc``, an
+      EventTimeTimeout armed at the earliest held row;
+    - otherwise ``ttl_ms`` (``table.exec.state.ttl``) as a
+      ProcessingTimeTimeout refreshed by every call; on expiry the key
+      is evicted after ``on_expire(fields)`` (if given) returns its
+      last output.
+
+    ``codec`` replaces ``_held_codec`` for an operator that keeps its
+    held rows inside its own fields; ``state_schema`` then names
+    every field (no ``held binary`` is prepended)."""
+    from pyspark.sql.streaming.state import GroupStateTimeout  # noqa: PLC0415
+
+    reorder = reorder_wm_col is not None
+    if reorder:
+        if reorder_wm_col not in df.columns:
+            raise ValueError(f"column '{reorder_wm_col}' not in input")
+        _warn_ttl_with_reorder(ttl_ms, op)
+        timeout = GroupStateTimeout.EventTimeTimeout
+    elif ttl_ms:
+        timeout = GroupStateTimeout.ProcessingTimeTimeout
+    else:
+        timeout = GroupStateTimeout.NoTimeout
+    if codec is None:
+        codec = _held_codec(reorder)
+        if reorder:
+            state_schema = f"held binary, {state_schema}"
+    decode, encode = codec
+
+    def fn(key, pdfs: Iterator[pd.DataFrame], raw) -> Iterator[pd.DataFrame]:
+        state = _VersionedState(raw)
+        if state.hasTimedOut and not reorder:
+            # idle key past table.exec.state.ttl
+            out = on_expire(decode(state.get)[1]) if on_expire else None
+            state.remove()
+        else:
+            held, st = decode(state.get) if state.exists else (None, init)
+            chunks = [] if state.hasTimedOut else [p for p in pdfs if len(p)]
+            if reorder:
+                wm = state.getCurrentWatermarkMs()
+                rows, held, late = _reorder_release(
+                    held, chunks, reorder_wm_col, wm
+                )
+                if late and late_acc is not None:
+                    late_acc.add(late)
+            else:
+                rows = _concat(chunks)
+            out = None
+            if rows is not None:
+                if order_by:
+                    rows = rows.sort_values(
+                        order_by, kind="mergesort"
+                    ).reset_index(drop=True)
+                st, out = step(key, st, rows)
+            state.update(encode(held, st))
+            if reorder:
+                arm = _held_ts_ms(held, reorder_wm_col)
+                if arm is not None:
+                    state.setTimeoutTimestamp(max(arm, wm + 1))
+            elif ttl_ms:
+                state.setTimeoutDuration(ttl_ms)
+        if out is not None and len(out):
+            yield out
+
+    return df.groupBy(*keys).applyInPandasWithState(
+        fn, out_schema, f"sv int, {state_schema}", "append", timeout
+    )
+
+
+def _value_codec(
+    in_schema: dict[str, str], value_col: str, op: str, default=None
+) -> tuple[str, str, Callable, object]:
+    """Type gate and state encoder shared by LAG, LEAD and NTH_VALUE:
+    returns ``(value type, state type, enc, enc(default))``. ``enc``
+    keeps a NULL as None, never a NaN marker (not ``_encode_slots``):
+    the batch functions return NULL for a NULL value, and NaN is a
+    distinct double."""
+    vt = in_schema[value_col]
+    if vt in _OVER_INT_TYPES:
+        state_t, conv = "bigint", int
+    elif vt in _OVER_FLOAT_TYPES:
+        state_t, conv = "double", float
+    elif vt == "string":
+        state_t, conv = "string", str
+    else:
+        raise NotImplementedError(
+            f"streaming {op} supports integral, floating-point and "
+            f"string value columns; '{value_col}' is {vt}"
+        )
+
+    def enc(v):
+        return None if _is_null(v) else conv(v)
+
+    try:
+        fill = enc(default)  # type-coerced like any stored value
+    except (TypeError, ValueError) as e:
+        # a default the value column's type cannot hold must surface
+        # as ITS OWN error, not the generic unsupported-shape guidance
+        # (VERDICT r8 cosmetic #4)
+        raise NotImplementedError(
+            f"streaming {op}: default {default!r} is not coercible to "
+            f"the value column's type ({vt})"
+        ) from e
+    return vt, state_t, enc, fill
+
+
 def streaming_lag(
     df: DataFrame,
     partition_by: list[str],
@@ -239,13 +393,6 @@ def streaming_lag(
     ``late_acc`` (a Spark accumulator) counts the beyond-watermark
     rows the gate drops — observability for Flink's late-data side
     effect (VERDICT r7 ask #2)."""
-    import pickle  # noqa: PLC0415
-
-    from pyspark.sql.streaming.state import (  # noqa: PLC0415
-        GroupState,
-        GroupStateTimeout,
-    )
-
     if offset < 1:
         # LAG(x, 0) is the current row; negative offsets are LEAD.
         # The ring holds exactly `offset` displaced values, so both
@@ -255,107 +402,27 @@ def streaming_lag(
     for c in partition_by + order_by + [value_col]:
         if c not in in_schema:
             raise ValueError(f"column '{c}' not in input")
-    vt = in_schema[value_col]
-    if vt not in _OVER_INT_TYPES + _OVER_FLOAT_TYPES + ("string",):
-        raise NotImplementedError(
-            f"streaming LAG supports integral, floating-point and "
-            f"string value columns; '{value_col}' is {vt}"
-        )
-    is_int = vt in _OVER_INT_TYPES
-    state_t = "bigint" if is_int else ("double" if vt in _OVER_FLOAT_TYPES else "string")
+    vt, state_t, enc, fill = _value_codec(in_schema, value_col, "LAG", default)
     out_schema = (
         ", ".join(f"{c} {t}" for c, t in in_schema.items())
         + f", {value_col}_lag {vt}"
     )
     cols = list(df.columns)
 
-    def enc(v):
-        # deliberately NOT _encode_slots: a lagged NULL must re-emit
-        # as NULL (None), never the frame-slot NaN marker — batch LAG
-        # of a NULL value yields NULL, and NaN is a distinct double
-        if _is_null(v):
-            return None
-        if is_int:
-            return int(v)
-        return float(v) if state_t == "double" else str(v)
-
-    reorder = reorder_wm_col is not None
-    if reorder and reorder_wm_col not in in_schema:
-        raise ValueError(f"column '{reorder_wm_col}' not in input")
-    if reorder:
-        _warn_ttl_with_reorder(ttl_ms, "streaming_lag")
-    state_schema = ("held binary, " if reorder else "") + f"ring array<{state_t}>"
-    timeout = (
-        GroupStateTimeout.EventTimeTimeout if reorder
-        else GroupStateTimeout.ProcessingTimeTimeout if ttl_ms
-        else GroupStateTimeout.NoTimeout
-    )
-
-    try:
-        fill = enc(default)  # type-coerced like any ring value
-    except (TypeError, ValueError) as e:
-        # a default the value column's type cannot hold must surface
-        # as ITS OWN error, not the generic unsupported-shape guidance
-        # (VERDICT r8 cosmetic #4)
-        raise NotImplementedError(
-            f"streaming LAG: default {default!r} is not coercible to "
-            f"the value column's type ({vt})"
-        ) from e
-
-    def run(ring: list, pdf: pd.DataFrame) -> list:
+    def step(_key, st: tuple, rows: pd.DataFrame):
+        ring = list(st[0])
         out_rows = []
-        vals = pdf[value_col].tolist()
-        for row, v in zip(pdf[cols].itertuples(index=False), vals):
-            lag_v = ring[0] if len(ring) >= offset else fill
-            out_rows.append([*row, lag_v])
+        for row, v in zip(rows[cols].itertuples(index=False), rows[value_col].tolist()):
+            out_rows.append([*row, ring[0] if len(ring) >= offset else fill])
             ring.append(enc(v))
             if len(ring) > offset:
                 ring.pop(0)
-        return out_rows
+        return (ring,), pd.DataFrame(out_rows, columns=[*cols, f"{value_col}_lag"])
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if reorder:
-            if state.exists:
-                held_blob, ring_arr = state.get
-                ring = list(ring_arr)
-            else:
-                held_blob, ring = None, []
-            chunks = [] if state.hasTimedOut else [p for p in pdfs if len(p)]
-            wm = state.getCurrentWatermarkMs()
-            released, held, late = _reorder_release(
-                held_blob, chunks, reorder_wm_col, wm
-            )
-            if late and late_acc is not None:
-                late_acc.add(late)
-            out_rows = []
-            if released is not None:
-                released = released.sort_values(order_by, kind="mergesort")
-                out_rows = run(ring, released)
-            state.update((bytearray(pickle.dumps(held)), ring))
-            arm = _held_ts_ms(held, reorder_wm_col)
-            if arm is not None:
-                state.setTimeoutTimestamp(max(arm, wm + 1))
-            if out_rows:
-                yield pd.DataFrame(out_rows, columns=[*cols, f"{value_col}_lag"])
-            return
-        if state.hasTimedOut:
-            state.remove()
-            return
-        ring = list(state.get[0]) if state.exists else []
-        out_rows = []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values(order_by, kind="mergesort")
-            out_rows.extend(run(ring, pdf))
-        state.update((ring,))
-        if ttl_ms:
-            state.setTimeoutDuration(ttl_ms)
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=[*cols, f"{value_col}_lag"])
-
-    return _apply_with_state(
-        df.groupBy(*partition_by), fn, out_schema, state_schema, "append", timeout
+    return _keyed_state(
+        df, partition_by, out_schema, f"ring array<{state_t}>", ([],), step,
+        op="streaming_lag", order_by=order_by, ttl_ms=ttl_ms,
+        reorder_wm_col=reorder_wm_col, late_acc=late_acc,
     )
 
 
@@ -394,125 +461,43 @@ def streaming_lead(
     A stored NULL at the lead position emits NULL, never ``default``
     (batch parity); ``default`` only fills rows whose lead row does
     not exist (TTL flush)."""
-    import pickle  # noqa: PLC0415
-
-    from pyspark.sql.streaming.state import (  # noqa: PLC0415
-        GroupState,
-        GroupStateTimeout,
-    )
-
     if offset < 1:
         raise ValueError(f"streaming LEAD offset must be >= 1, got {offset}")
     in_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     for c in partition_by + order_by + [value_col]:
         if c not in in_schema:
             raise ValueError(f"column '{c}' not in input")
-    vt = in_schema[value_col]
-    if vt not in _OVER_INT_TYPES + _OVER_FLOAT_TYPES + ("string",):
-        raise NotImplementedError(
-            f"streaming LEAD supports integral, floating-point and "
-            f"string value columns; '{value_col}' is {vt}"
-        )
-    is_int = vt in _OVER_INT_TYPES
+    vt, _state_t, enc, fill = _value_codec(in_schema, value_col, "LEAD", default)
     out_schema = (
         ", ".join(f"{c} {t}" for c, t in in_schema.items())
         + f", {value_col}_lead {vt}"
     )
     cols = list(df.columns)
+    out_cols = [*cols, f"{value_col}_lead"]
 
-    def enc(v):
-        if _is_null(v):
-            return None
-        if is_int:
-            return int(v)
-        return float(v) if vt in _OVER_FLOAT_TYPES else str(v)
-
-    reorder = reorder_wm_col is not None
-    if reorder and reorder_wm_col not in in_schema:
-        raise ValueError(f"column '{reorder_wm_col}' not in input")
-    if reorder:
-        _warn_ttl_with_reorder(ttl_ms, "streaming_lead")
     # pending = the ≤k rows awaiting their lead value (full rows, a
     # pickled list of row-lists — O(k) per key)
-    state_schema = ("held binary, " if reorder else "") + "pending binary"
-    timeout = (
-        GroupStateTimeout.EventTimeTimeout if reorder
-        else GroupStateTimeout.ProcessingTimeTimeout if ttl_ms
-        else GroupStateTimeout.NoTimeout
-    )
-    try:
-        fill = enc(default)
-    except (TypeError, ValueError) as e:
-        raise NotImplementedError(
-            f"streaming LEAD: default {default!r} is not coercible to "
-            f"the value column's type ({vt})"
-        ) from e
-
-    def run(pending: list, pdf: pd.DataFrame) -> list:
+    def step(_key, st: tuple, rows: pd.DataFrame):
+        pending = pickle.loads(bytes(st[0]))
         out_rows = []
-        vals = pdf[value_col].tolist()
-        for row, v in zip(pdf[cols].itertuples(index=False), vals):
+        for row, v in zip(rows[cols].itertuples(index=False), rows[value_col].tolist()):
             pending.append(list(row))
             if len(pending) > offset:
-                done = pending.pop(0)
                 # the arriving row IS the completed row's lead row;
                 # its NULL value stays NULL (batch parity)
-                out_rows.append([*done, enc(v)])
-        return out_rows
+                out_rows.append([*pending.pop(0), enc(v)])
+        return (_blob(pending),), pd.DataFrame(out_rows, columns=out_cols)
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        out_cols = [*cols, f"{value_col}_lead"]
-        if reorder:
-            if state.exists:
-                held_blob, pend_blob = state.get
-                pending = pickle.loads(bytes(pend_blob))
-            else:
-                held_blob, pending = None, []
-            chunks = [] if state.hasTimedOut else [p for p in pdfs if len(p)]
-            wm = state.getCurrentWatermarkMs()
-            released, held, late = _reorder_release(
-                held_blob, chunks, reorder_wm_col, wm
-            )
-            if late and late_acc is not None:
-                late_acc.add(late)
-            out_rows = []
-            if released is not None:
-                released = released.sort_values(order_by, kind="mergesort")
-                out_rows = run(pending, released)
-            state.update(
-                (bytearray(pickle.dumps(held)), bytearray(pickle.dumps(pending)))
-            )
-            arm = _held_ts_ms(held, reorder_wm_col)
-            if arm is not None:
-                state.setTimeoutTimestamp(max(arm, wm + 1))
-            if out_rows:
-                yield pd.DataFrame(out_rows, columns=out_cols)
-            return
-        if state.hasTimedOut:
-            # TTL flush: no further rows are coming for this key —
-            # batch end-of-input semantics, lead = default
-            pending = pickle.loads(bytes(state.get[0]))
-            state.remove()
-            if pending:
-                yield pd.DataFrame(
-                    [[*row, fill] for row in pending], columns=out_cols
-                )
-            return
-        pending = pickle.loads(bytes(state.get[0])) if state.exists else []
-        out_rows = []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values(order_by, kind="mergesort")
-            out_rows.extend(run(pending, pdf))
-        state.update((bytearray(pickle.dumps(pending)),))
-        if ttl_ms:
-            state.setTimeoutDuration(ttl_ms)
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=out_cols)
+    def on_expire(st: tuple) -> pd.DataFrame:
+        # TTL flush: no further rows are coming for this key — batch
+        # end-of-input semantics, lead = default
+        pending = pickle.loads(bytes(st[0]))
+        return pd.DataFrame([[*row, fill] for row in pending], columns=out_cols)
 
-    return _apply_with_state(
-        df.groupBy(*partition_by), fn, out_schema, state_schema, "append", timeout
+    return _keyed_state(
+        df, partition_by, out_schema, "pending binary", (_blob([]),), step,
+        op="streaming_lead", order_by=order_by, ttl_ms=ttl_ms,
+        reorder_wm_col=reorder_wm_col, late_acc=late_acc, on_expire=on_expire,
     )
 
 
@@ -541,27 +526,13 @@ def streaming_nth_value(
     re-buffer to event-time order up to the query watermark before
     entering the running state, and beyond-watermark drops are
     counted (VERDICT r7 ask #2 semantics)."""
-    import pickle  # noqa: PLC0415
-
-    from pyspark.sql.streaming.state import (  # noqa: PLC0415
-        GroupState,
-        GroupStateTimeout,
-    )
-
     if n < 1:
         raise ValueError(f"streaming NTH_VALUE position must be >= 1, got {n}")
     in_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     for c in partition_by + order_by + [value_col]:
         if c not in in_schema:
             raise ValueError(f"column '{c}' not in input")
-    vt = in_schema[value_col]
-    if vt not in _OVER_INT_TYPES + _OVER_FLOAT_TYPES + ("string",):
-        raise NotImplementedError(
-            f"streaming NTH_VALUE supports integral, floating-point and "
-            f"string value columns; '{value_col}' is {vt}"
-        )
-    is_int = vt in _OVER_INT_TYPES
-    state_t = "bigint" if is_int else ("double" if vt in _OVER_FLOAT_TYPES else "string")
+    vt, state_t, enc, _fill = _value_codec(in_schema, value_col, "NTH_VALUE")
     out_name = f"{value_col}_nth{n}"
     if out_name in in_schema:
         raise ValueError(
@@ -574,81 +545,20 @@ def streaming_nth_value(
     )
     cols = list(df.columns)
 
-    def enc(v):
-        # like streaming_lag: a stored NULL stays NULL (None), never a
-        # NaN marker — batch NTH_VALUE of a NULL row yields NULL
-        if _is_null(v):
-            return None
-        if is_int:
-            return int(v)
-        return float(v) if state_t == "double" else str(v)
-
-    reorder = reorder_wm_col is not None
-    if reorder and reorder_wm_col not in in_schema:
-        raise ValueError(f"column '{reorder_wm_col}' not in input")
-    if reorder:
-        _warn_ttl_with_reorder(ttl_ms, "streaming_nth_value")
-    state_schema = ("held binary, " if reorder else "") + f"seen bigint, nth {state_t}"
-    timeout = (
-        GroupStateTimeout.EventTimeTimeout if reorder
-        else GroupStateTimeout.ProcessingTimeTimeout if ttl_ms
-        else GroupStateTimeout.NoTimeout
-    )
-
-    def run(st: list, pdf: pd.DataFrame) -> list:
+    def step(_key, st: tuple, rows: pd.DataFrame):
+        seen, nth = st
         out_rows = []
-        vals = pdf[value_col].tolist()
-        for row, v in zip(pdf[cols].itertuples(index=False), vals):
-            st[0] += 1
-            if st[0] == n:
-                st[1] = enc(v)
-            out_rows.append([*row, st[1] if st[0] >= n else None])
-        return out_rows
+        for row, v in zip(rows[cols].itertuples(index=False), rows[value_col].tolist()):
+            seen += 1
+            if seen == n:
+                nth = enc(v)
+            out_rows.append([*row, nth if seen >= n else None])
+        return (seen, nth), pd.DataFrame(out_rows, columns=[*cols, out_name])
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        out_cols = [*cols, out_name]
-        if reorder:
-            if state.exists:
-                held_blob, seen, nth = state.get
-                st = [seen, nth]
-            else:
-                held_blob, st = None, [0, None]
-            chunks = [] if state.hasTimedOut else [p for p in pdfs if len(p)]
-            wm = state.getCurrentWatermarkMs()
-            released, held, late = _reorder_release(
-                held_blob, chunks, reorder_wm_col, wm
-            )
-            if late and late_acc is not None:
-                late_acc.add(late)
-            out_rows = []
-            if released is not None:
-                released = released.sort_values(order_by, kind="mergesort")
-                out_rows = run(st, released)
-            state.update((bytearray(pickle.dumps(held)), st[0], st[1]))
-            arm = _held_ts_ms(held, reorder_wm_col)
-            if arm is not None:
-                state.setTimeoutTimestamp(max(arm, wm + 1))
-            if out_rows:
-                yield pd.DataFrame(out_rows, columns=out_cols)
-            return
-        if state.hasTimedOut:
-            state.remove()
-            return
-        st = [state.get[0], state.get[1]] if state.exists else [0, None]
-        out_rows = []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values(order_by, kind="mergesort")
-            out_rows.extend(run(st, pdf))
-        state.update((st[0], st[1]))
-        if ttl_ms:
-            state.setTimeoutDuration(ttl_ms)
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=out_cols)
-
-    return _apply_with_state(
-        df.groupBy(*partition_by), fn, out_schema, state_schema, "append", timeout
+    return _keyed_state(
+        df, partition_by, out_schema, f"seen bigint, nth {state_t}", (0, None),
+        step, op="streaming_nth_value", order_by=order_by, ttl_ms=ttl_ms,
+        reorder_wm_col=reorder_wm_col, late_acc=late_acc,
     )
 
 
@@ -676,13 +586,6 @@ def streaming_rank(
     ``{o}_drnk`` (the SQL router splices whichever the statement
     used). The order value is compared by its string encoding —
     equality-only, never ordering, so any atomic column type works."""
-    import pickle  # noqa: PLC0415
-
-    from pyspark.sql.streaming.state import (  # noqa: PLC0415
-        GroupState,
-        GroupStateTimeout,
-    )
-
     in_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     for c in partition_by + order_by:
         if c not in in_schema:
@@ -708,82 +611,26 @@ def streaming_rank(
         # together, so equal ranks — batch NULLS FIRST parity)
         return "\x00null" if _is_null(v) else f"v{v!r}"
 
-    reorder = reorder_wm_col is not None
-    if reorder and reorder_wm_col not in in_schema:
-        raise ValueError(f"column '{reorder_wm_col}' not in input")
-    if reorder:
-        _warn_ttl_with_reorder(ttl_ms, "streaming_rank")
-    state_schema = (
-        ("held binary, " if reorder else "")
-        + "seen bigint, dense bigint, last_rank bigint, last_val string"
-    )
-    timeout = (
-        GroupStateTimeout.EventTimeTimeout if reorder
-        else GroupStateTimeout.ProcessingTimeTimeout if ttl_ms
-        else GroupStateTimeout.NoTimeout
-    )
-
-    def run(st: list, pdf: pd.DataFrame) -> list:
-        # st = [seen, dense, last_rank, last_val]
+    def step(_key, st: tuple, rows: pd.DataFrame):
+        seen, dense, last_rank, last_val = st
         out_rows = []
-        ovals = pdf[order_col].tolist()
-        for row, ov in zip(pdf[cols].itertuples(index=False), ovals):
-            key = enc(ov)
-            if st[0] > 0 and key == st[3]:
-                rank = st[2]  # tie: repeat the peer group's rank
-            else:
-                rank = st[0] + 1
-                st[1] += 1
-                st[2] = rank
-                st[3] = key
-            st[0] += 1
-            out_rows.append([*row, st[0], rank, st[1]])
-        return out_rows
+        for row, ov in zip(rows[cols].itertuples(index=False), rows[order_col].tolist()):
+            val = enc(ov)
+            if seen == 0 or val != last_val:
+                dense += 1
+                last_rank, last_val = seen + 1, val
+            # else a tie: repeat the peer group's rank
+            seen += 1
+            out_rows.append([*row, seen, last_rank, dense])
+        return (seen, dense, last_rank, last_val), pd.DataFrame(
+            out_rows, columns=[*cols, *out_names]
+        )
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        out_cols = [*cols, *out_names]
-        if reorder:
-            if state.exists:
-                held_blob, seen, dense, last_rank, last_val = state.get
-                st = [seen, dense, last_rank, last_val]
-            else:
-                held_blob, st = None, [0, 0, 0, ""]
-            chunks = [] if state.hasTimedOut else [p for p in pdfs if len(p)]
-            wm = state.getCurrentWatermarkMs()
-            released, held, late = _reorder_release(
-                held_blob, chunks, reorder_wm_col, wm
-            )
-            if late and late_acc is not None:
-                late_acc.add(late)
-            out_rows = []
-            if released is not None:
-                released = released.sort_values(order_by, kind="mergesort")
-                out_rows = run(st, released)
-            state.update((bytearray(pickle.dumps(held)), *st))
-            arm = _held_ts_ms(held, reorder_wm_col)
-            if arm is not None:
-                state.setTimeoutTimestamp(max(arm, wm + 1))
-            if out_rows:
-                yield pd.DataFrame(out_rows, columns=out_cols)
-            return
-        if state.hasTimedOut:
-            state.remove()
-            return
-        st = list(state.get) if state.exists else [0, 0, 0, ""]
-        out_rows = []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values(order_by, kind="mergesort")
-            out_rows.extend(run(st, pdf))
-        state.update(tuple(st))
-        if ttl_ms:
-            state.setTimeoutDuration(ttl_ms)
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=out_cols)
-
-    return _apply_with_state(
-        df.groupBy(*partition_by), fn, out_schema, state_schema, "append", timeout
+    return _keyed_state(
+        df, partition_by, out_schema,
+        "seen bigint, dense bigint, last_rank bigint, last_val string",
+        (0, 0, 0, ""), step, op="streaming_rank", order_by=order_by,
+        ttl_ms=ttl_ms, reorder_wm_col=reorder_wm_col, late_acc=late_acc,
     )
 
 
@@ -821,18 +668,6 @@ def streaming_first_n(
     ProcessingTimeTimeout TTL (one timeout type per operator —
     documented tradeoff; the held buffer drains by watermark, the
     counter is 8 bytes/key)."""
-    import pickle  # noqa: PLC0415
-
-    from pyspark.sql.streaming.state import (  # noqa: PLC0415
-        GroupState,
-        GroupStateTimeout,
-    )
-
-    reorder = reorder_wm_col is not None
-    if reorder and reorder_wm_col not in df.columns:
-        raise ValueError(f"column '{reorder_wm_col}' not in input")
-    if reorder:
-        _warn_ttl_with_reorder(ttl_ms, "streaming_first_n")
     if rn_col is not None and rn_col in df.columns:
         raise ValueError(
             f"rank column '{rn_col}' collides with an input column"
@@ -842,59 +677,20 @@ def streaming_first_n(
     ) + (f", {rn_col} bigint" if rn_col else "")
     cols = list(df.columns)
 
-    def take_rows(pdf: pd.DataFrame, count: int, take: int) -> pd.DataFrame:
-        out = pdf[cols].iloc[:take]
+    def step(_key, st: tuple, rows: pd.DataFrame):
+        count = st[0]
+        if count >= n:
+            return st, None
+        take = min(n - count, len(rows))
+        out = rows[cols].iloc[:take]
         if rn_col is not None:
             out = out.assign(**{rn_col: range(count + 1, count + take + 1)})
-        return out
+        return (count + take,), out
 
-    state_schema = ("held binary, " if reorder else "") + "emitted bigint"
-    timeout = (
-        GroupStateTimeout.EventTimeTimeout if reorder
-        else GroupStateTimeout.ProcessingTimeTimeout if ttl_ms
-        else GroupStateTimeout.NoTimeout
-    )
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if reorder:
-            if state.exists:
-                held_blob, count = state.get
-            else:
-                held_blob, count = None, 0
-            chunks = [] if state.hasTimedOut else [p for p in pdfs if len(p)]
-            wm = state.getCurrentWatermarkMs()
-            released, held, late = _reorder_release(
-                held_blob, chunks, reorder_wm_col, wm
-            )
-            if late and late_acc is not None:
-                late_acc.add(late)
-            if released is not None and count < n:
-                released = released.sort_values(order_by, kind="mergesort")
-                take = min(n - count, len(released))
-                yield take_rows(released, count, take)
-                count += take
-            state.update((bytearray(pickle.dumps(held)), count))
-            arm = _held_ts_ms(held, reorder_wm_col)
-            if arm is not None:
-                state.setTimeoutTimestamp(max(arm, wm + 1))
-            return
-        if state.hasTimedOut:
-            state.remove()
-            return
-        count = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            if not len(pdf) or count >= n:
-                continue
-            pdf = pdf.sort_values(order_by, kind="mergesort")
-            take = min(n - count, len(pdf))
-            yield take_rows(pdf, count, take)
-            count += take
-        state.update((count,))
-        if ttl_ms:
-            state.setTimeoutDuration(ttl_ms)
-
-    return _apply_with_state(
-        df.groupBy(*keys), fn, out_schema, state_schema, "append", timeout
+    return _keyed_state(
+        df, keys, out_schema, "emitted bigint", (0,), step,
+        op="streaming_first_n", order_by=order_by, ttl_ms=ttl_ms,
+        reorder_wm_col=reorder_wm_col, late_acc=late_acc,
     )
 
 
@@ -948,13 +744,6 @@ def streaming_keep_last(
     processed in arrival order within each micro-batch (module-level
     semantic note).
     """
-    import pickle  # noqa: PLC0415
-
-    from pyspark.sql.streaming.state import (  # noqa: PLC0415
-        GroupState,
-        GroupStateTimeout,
-    )
-
     in_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     for c in [*keys, order_col]:
         if c not in in_schema:
@@ -981,27 +770,13 @@ def streaming_keep_last(
         # rows forever)
         return tuple(None if _is_null(v) else v for v in row)
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        top: pd.DataFrame | None = (
-            pickle.loads(bytes(state.get[0])) if state.exists else None
-        )
-        new = [p for p in pdfs if len(p)]
-        if not new:
-            if top is not None:
-                state.update((bytearray(pickle.dumps(top)),))
-                if ttl_ms:
-                    state.setTimeoutDuration(ttl_ms)
-            return
-        batch = pd.concat(new, ignore_index=True) if len(new) > 1 else new[0]
-        batch = batch[cols]
+    def step(_key, st: tuple, rows: pd.DataFrame):
+        top: pd.DataFrame | None = pickle.loads(bytes(st[0]))
+        batch = rows[cols]
         # old rows first: the stable sort then keeps later-arriving
         # rows AFTER state rows on order-value ties, and tail(n)
         # prefers them — keep-LAST tie semantics
-        parts = [top, batch] if top is not None and len(top) else [batch]
-        merged = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
+        merged = _concat([top, batch] if top is not None and len(top) else [batch])
         merged = merged.sort_values(
             order_col, kind="mergesort", na_position="first"
         )
@@ -1041,90 +816,12 @@ def streaming_keep_last(
                 out_rows.extend([["-D", *r]] * cnt)
             for r, cnt in (new_c - old_c).items():
                 out_rows.extend([["+I", *r]] * cnt)
-        state.update((bytearray(pickle.dumps(new_top)),))
-        if ttl_ms:
-            state.setTimeoutDuration(ttl_ms)
-        if out_rows:
-            out_cols = (
-                ["__op", *cols, rn_col] if rn_col is not None
-                else ["__op", *cols]
-            )
-            yield pd.DataFrame(out_rows, columns=out_cols)
+        out_cols = ["__op", *cols, rn_col] if rn_col is not None else ["__op", *cols]
+        return (_blob(new_top),), pd.DataFrame(out_rows, columns=out_cols)
 
-    return _apply_with_state(
-        df.groupBy(*keys),
-        fn,
-        out_schema,
-        "top binary",
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout if ttl_ms else GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_funnel(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    a_cond: str,
-    b_cond: str,
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """Streaming PATTERN (A+ B) per key (the CEP funnel).
-
-    State per key: (n_a, first_a_epoch_us) — the open partial match.
-    On a B row with n_a ≥ 1 → emit (key, start_ts, purchase_ts,
-    n_before) and reset. Constant-size state; TTL evicts stale
-    partial matches (``table.exec.state.ttl``).
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout  # noqa: PLC0415
-
-    work = (
-        df.withColumn("is_a", F.expr(a_cond))
-        .withColumn("is_b", F.expr(b_cond))
-        .select(key_col, ts_col, "is_a", "is_b")
-    )
-    out_schema = (
-        f"{key_col} bigint, start_ts timestamp, purchase_ts timestamp, n_before bigint"
-    )
-    state_schema = "n_a bigint, first_us bigint"
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout if ttl_ms else GroupStateTimeout.NoTimeout
-    )
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(
-                columns=[key_col, "start_ts", "purchase_ts", "n_before"]
-            )
-            return
-        n_a, first_us = state.get if state.exists else (0, None)
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col, kind="mergesort")
-            for ts, is_a, is_b in zip(pdf[ts_col], pdf["is_a"], pdf["is_b"]):
-                if is_b:
-                    if n_a >= 1:
-                        out.append(
-                            (
-                                key[0],
-                                pd.Timestamp(first_us, unit="us"),
-                                ts,
-                                n_a,
-                            )
-                        )
-                    n_a, first_us = 0, None
-                elif is_a:
-                    if n_a == 0:
-                        first_us = int(pd.Timestamp(ts).value // 1000)
-                    n_a += 1
-        state.update((n_a, first_us))
-        if ttl_ms:
-            state.setTimeoutDuration(ttl_ms)
-        yield pd.DataFrame(out, columns=[key_col, "start_ts", "purchase_ts", "n_before"])
-
-    return _apply_with_state(
-        work.groupBy(key_col), fn, out_schema, state_schema, "append", timeout
+    return _keyed_state(
+        df, keys, out_schema, "top binary", (_blob(None),), step,
+        op="streaming_keep_last", ttl_ms=ttl_ms,
     )
 
 
@@ -1146,9 +843,8 @@ def streaming_match_recognize(
 ) -> DataFrame:
     """General streaming MATCH_RECOGNIZE: the batch NFA with its
     open-match state carried across micro-batches
-    (``applyInPandasWithState``), replacing the fixed-shape funnel for
-    arbitrary PATTERNs (reference grammar
-    syntaxes/flink.tmLanguage.json:363-367; corpus
+    (``applyInPandasWithState``), for arbitrary PATTERNs (reference
+    grammar syntaxes/flink.tmLanguage.json:363-367; corpus
     test/syntax-test.fsql:467-482).
 
     Emission is *prefix-stable*: the NFA (match_recognize.run_nfa in
@@ -1177,7 +873,7 @@ def streaming_match_recognize(
     by a last-row context carried in state). PREV conditions are
     limited to the dynamic-predicate grammar (comparisons, arithmetic,
     AND/OR/NOT, IS [NOT] NULL — no SQL function calls). Rows are processed
-    in arrival order, sorted by event time within each micro-batch —
+    in arrival order, sorted by ORDER BY within each micro-batch —
     the module-level semantic note applies — unless ``reorder_wm_col``
     (the stream's watermark column) re-buffers rows to event-time
     order up to the query watermark before they enter the NFA, the
@@ -1187,13 +883,6 @@ def streaming_match_recognize(
     it replaces the processing-time TTL flush (documented tradeoff:
     one timeout type per operator).
     """
-    import pickle  # noqa: PLC0415
-
-    from pyspark.sql.streaming.state import (  # noqa: PLC0415
-        GroupState,
-        GroupStateTimeout,
-    )
-
     from flink_sql_toolkit_spark.operators.match_recognize import (  # noqa: PLC0415
         match_recognize,
     )
@@ -1217,79 +906,24 @@ def streaming_match_recognize(
     # materializes them pandas-side (shift within the buffered frame,
     # seeded at the batch boundary from a last-row context in state)
     lags: dict[str, str] = compiled["lags"]
-    out_schema, sort_cols = compiled["out_schema"], compiled["sort_cols"]
     reorder = reorder_wm_col is not None
-    if reorder and reorder_wm_col not in work.columns:
-        raise ValueError(f"column '{reorder_wm_col}' not in input")
-    if reorder:
-        _warn_ttl_with_reorder(ttl_ms, "streaming_match_recognize")
-    state_schema = "buf binary, match_no bigint"
-    timeout = (
-        GroupStateTimeout.EventTimeTimeout if reorder
-        else GroupStateTimeout.ProcessingTimeTimeout if ttl_ms
-        else GroupStateTimeout.NoTimeout
-    )
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut and not reorder:
-            blob, match_no = state.get
-            state.remove()
-            stored = pickle.loads(bytes(blob))
-            buf = stored[0] if isinstance(stored, tuple) else stored
-            if len(buf):
-                # TTL flush: decide the held suffix as if the stream
-                # ended here (batch semantics), then clear the key
-                out = run_nfa(buf.reset_index(drop=True), match_no_base=match_no)
-                if len(out):
-                    yield out
-            return
-        blob_match = state.get if state.exists else None
-        ctx: dict = {}
-        held_frame = None
-        if blob_match is not None:
-            stored = pickle.loads(bytes(blob_match[0]))
-            # state format: (buffer frame, lag context[, held rows]) —
-            # older blobs held the bare frame or the 2-tuple
-            if isinstance(stored, tuple):
-                buf, ctx = stored[0], stored[1]
-                held_frame = stored[2] if len(stored) > 2 else None
-            else:
-                buf = stored
-            match_no = blob_match[1]
-        else:
-            buf, match_no = None, 0
-        n_buf = len(buf) if buf is not None else 0
-        new = [p for p in pdfs if len(p)] if not state.hasTimedOut else []
-        wm = 0
-        if reorder:
-            # event-time re-buffer: rows wait in state until the query
-            # watermark passes them, then enter the NFA in event order
-            wm = state.getCurrentWatermarkMs()
-            batch, held_frame, late = _reorder_release(
-                held_frame, new, reorder_wm_col, wm
-            )
-            if late and late_acc is not None:
-                late_acc.add(late)
-            if batch is not None:
-                batch = batch.sort_values(sort_cols, kind="mergesort")
-            parts = ([buf] if n_buf else []) + ([batch] if batch is not None else [])
-        elif not new:
-            parts = [buf] if n_buf else []
-        else:
-            batch = pd.concat(new, ignore_index=True) if len(new) > 1 else new[0]
-            batch = batch.sort_values(sort_cols, kind="mergesort")
-            parts = ([buf] if n_buf else []) + [batch]
-        if not parts:
-            if reorder:
-                state.update(
-                    (bytearray(pickle.dumps((pd.DataFrame(), ctx, held_frame))), match_no)
-                )
-                arm = _held_ts_ms(held_frame, reorder_wm_col)
-                if arm is not None:
-                    state.setTimeoutTimestamp(max(arm, wm + 1))
-            return
-        pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        pdf = pdf.reset_index(drop=True)
+    # state: one pickled (undecided suffix, lag context[, held rows])
+    # blob plus the match counter; the held rows ride inside the blob
+    # (only reorder writes the third element)
+    def decode(stored: tuple) -> tuple:
+        blob, match_no = stored
+        buf, ctx, *held = pickle.loads(bytes(blob))
+        return (held[0] if held else None), (buf, ctx, match_no)
+
+    def encode(held: pd.DataFrame | None, st: tuple) -> tuple:
+        buf, ctx, match_no = st
+        return _blob((buf, ctx, held) if reorder else (buf, ctx)), match_no
+
+    def step(key, st: tuple, rows: pd.DataFrame):
+        buf, ctx, match_no = st
+        n_buf = len(buf)
+        pdf = _concat([buf, rows] if n_buf else [rows]).reset_index(drop=True)
         for lag_name, col in lags.items():
             shifted = pdf[col].shift(1)
             if n_buf == 0 and col in ctx:
@@ -1325,19 +959,22 @@ def streaming_match_recognize(
             if truncation_acc is not None:
                 truncation_acc.add(dropped)
             keep = keep.iloc[-max_buffer_rows:]
-        stored_out = (keep, ctx, held_frame) if reorder else (keep, ctx)
-        state.update((bytearray(pickle.dumps(stored_out)), match_no))
-        if reorder:
-            arm = _held_ts_ms(held_frame, reorder_wm_col)
-            if arm is not None:
-                state.setTimeoutTimestamp(max(arm, wm + 1))
-        elif ttl_ms:
-            state.setTimeoutDuration(ttl_ms)
-        if len(out):
-            yield out
+        return (keep, ctx, match_no), out
 
-    return _apply_with_state(
-        work.groupBy(*partition_by), fn, out_schema, state_schema, "append", timeout
+    def on_expire(st: tuple) -> pd.DataFrame | None:
+        # TTL flush: decide the held suffix as if the stream ended
+        # here (batch semantics), then the shell clears the key
+        buf, _ctx, match_no = st
+        if not len(buf):
+            return None
+        return run_nfa(buf.reset_index(drop=True), match_no_base=match_no)
+
+    return _keyed_state(
+        work, partition_by, compiled["out_schema"], "buf binary, match_no bigint",
+        (pd.DataFrame(), {}, 0), step, op="streaming_match_recognize",
+        order_by=compiled["sort_cols"], ttl_ms=ttl_ms,
+        reorder_wm_col=reorder_wm_col, late_acc=late_acc,
+        codec=(decode, encode), on_expire=on_expire,
     )
 
 
@@ -1788,12 +1425,6 @@ def streaming_over_rows(
     replaces the ProcessingTimeTimeout TTL).
     """
     import numpy as np  # noqa: PLC0415
-    import pickle  # noqa: PLC0415
-
-    from pyspark.sql.streaming.state import (  # noqa: PLC0415
-        GroupState,
-        GroupStateTimeout,
-    )
 
     if n_preceding < 0:
         raise ValueError(f"n_preceding must be >= 0, got {n_preceding}")
@@ -1807,11 +1438,6 @@ def streaming_over_rows(
                 f"per-spec ROWS width must be an int >= 0 or "
                 f"'unbounded', got {sw!r}"
             )
-    reorder = reorder_wm_col is not None
-    if reorder and reorder_wm_col not in df.columns:
-        raise ValueError(f"column '{reorder_wm_col}' not in input")
-    if reorder:
-        _warn_ttl_with_reorder(ttl_ms, "streaming_over_rows")
     # state retains max(bounded width) values per column; narrower
     # specs read a shorter suffix of the shared seed. UNBOUNDED specs
     # keep no value history at all — just 4 running accumulators per
@@ -1825,8 +1451,7 @@ def streaming_over_rows(
         if any(cc == c and ww == UNBOUNDED for _a, cc, ww in specs)
     ]
     state_schema = ", ".join(
-        (["held binary"] if reorder else [])
-        + ["seen bigint"]
+        ["seen bigint"]
         + [
             f"f{i} array<{'bigint' if is_int[c] else 'double'}>"
             for i, c in enumerate(vcols)
@@ -1839,57 +1464,11 @@ def streaming_over_rows(
             for i, c in enumerate(ucols)
         ]
     )
-    timeout = (
-        GroupStateTimeout.EventTimeTimeout if reorder
-        else GroupStateTimeout.ProcessingTimeTimeout if ttl_ms
-        else GroupStateTimeout.NoTimeout
-    )
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut and not reorder:
-            # idle key past table.exec.state.ttl: evict its frames
-            state.remove()
-            return
-        held_blob = None
-        if state.exists:
-            st = state.get
-            base = st[1:] if reorder else st
-            held_blob = st[0] if reorder else None
-            seen = base[0]
-            seeds = [list(base[i + 1]) for i in range(len(vcols))]
-            runs = {
-                c: list(base[1 + len(vcols) + i])
-                for i, c in enumerate(ucols)
-            }
-        else:
-            seen, seeds = 0, [[] for _ in vcols]
-            runs = {c: [0, 0, 0, 0, 0, 0] for c in ucols}
-        chunks = [p for p in pdfs if len(p)] if not state.hasTimedOut else []
-        held, wm = None, 0
-        if reorder:
-            wm = state.getCurrentWatermarkMs()
-            batch, held, late = _reorder_release(
-                held_blob, chunks, reorder_wm_col, wm
-            )
-            if late and late_acc is not None:
-                late_acc.add(late)
-        else:
-            batch = (
-                pd.concat(chunks, ignore_index=True)
-                if len(chunks) > 1 else chunks[0] if chunks else None
-            )
-        if batch is None or not len(batch):
-            prefix = (bytearray(pickle.dumps(held)),) if reorder else ()
-            state.update((*prefix, seen, *seeds,
-                          *[runs[c] for c in ucols]))
-            if reorder:
-                arm = _held_ts_ms(held, reorder_wm_col)
-                if arm is not None:
-                    state.setTimeoutTimestamp(max(arm, wm + 1))
-            elif ttl_ms:
-                state.setTimeoutDuration(ttl_ms)
-            return
-        batch = batch.sort_values(order_by, kind="mergesort").reset_index(drop=True)
+    def step(_key, st: tuple, batch: pd.DataFrame):
+        seen = st[0]
+        seeds = [list(f) for f in st[1:1 + len(vcols)]]
+        runs = {c: list(u) for c, u in zip(ucols, st[1 + len(vcols):])}
         L = len(batch)
         # seeds all have length min(seen, w-1): one shared window set
         S = len(seeds[0]) if seeds else min(seen, w - 1)
@@ -1936,18 +1515,13 @@ def streaming_over_rows(
                 out[name] = pd.Series(uruns[c][a], dtype="object")
             else:
                 out[name] = pd.Series(per_cw[(c, sw)][a], dtype="object")
-        prefix = (bytearray(pickle.dumps(held)),) if reorder else ()
-        state.update((*prefix, seen + L, *seeds, *[runs[c] for c in ucols]))
-        if reorder:
-            arm = _held_ts_ms(held, reorder_wm_col)
-            if arm is not None:
-                state.setTimeoutTimestamp(max(arm, wm + 1))
-        elif ttl_ms:
-            state.setTimeoutDuration(ttl_ms)
-        yield out
+        return (seen + L, *seeds, *[runs[c] for c in ucols]), out
 
-    return _apply_with_state(
-        df.groupBy(*partition_by), fn, out_schema, state_schema, "append", timeout
+    return _keyed_state(
+        df, partition_by, out_schema, state_schema,
+        (0, *[[] for _ in vcols], *[[0, 0, 0, 0, 0, 0] for _ in ucols]),
+        step, op="streaming_over_rows", order_by=order_by, ttl_ms=ttl_ms,
+        reorder_wm_col=reorder_wm_col, late_acc=late_acc,
     )
 
 
@@ -2059,11 +1633,6 @@ def streaming_over_range(
     """
     import numpy as np  # noqa: PLC0415
 
-    from pyspark.sql.streaming.state import (  # noqa: PLC0415
-        GroupState,
-        GroupStateTimeout,
-    )
-
     if isinstance(order_by, str):
         order_by = [order_by]
     if len(order_by) != 1:
@@ -2091,40 +1660,23 @@ def streaming_over_range(
         ]
     )
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            st = state.get
-            ts_state = list(st[0])
-            seeds = [list(st[i + 1]) for i in range(len(vcols))]
-        else:
-            ts_state, seeds = [], [[] for _ in vcols]
-        chunks = [p for p in pdfs if len(p)]
-        batch = None
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-            # no rowtime → dropped, like Flink
-            batch = batch[batch[ts_col].notna()]
-            batch = batch.sort_values(ts_col, kind="mergesort").reset_index(drop=True)
-            t_us = (
-                batch[ts_col].to_numpy("datetime64[ns]").astype(np.int64) // 1000
-            )
-            if ts_state and len(batch):
-                # beyond-watermark late rows → dropped (the newest
-                # event per key stands in for the watermark; the batch
-                # is ascending, so only the prior state max can make a
-                # row late)
-                keep = t_us >= ts_state[-1] - horizon_us
-                if not keep.all():
-                    batch = batch[keep].reset_index(drop=True)
-                    t_us = t_us[keep]
-        if batch is None or not len(batch):
-            state.update((ts_state, *seeds))
-            if ttl_ms:
-                state.setTimeoutDuration(ttl_ms)
-            return
+    def step(_key, st: tuple, batch: pd.DataFrame):
+        ts_state = list(st[0])
+        seeds = [list(f) for f in st[1:]]
+        # no rowtime → dropped, like Flink
+        batch = batch[batch[ts_col].notna()].reset_index(drop=True)
+        t_us = batch[ts_col].to_numpy("datetime64[ns]").astype(np.int64) // 1000
+        if ts_state and len(batch):
+            # beyond-watermark late rows → dropped (the newest event
+            # per key stands in for the watermark; the batch is
+            # ascending, so only the prior state max can make a row
+            # late)
+            keep = t_us >= ts_state[-1] - horizon_us
+            if not keep.all():
+                batch = batch[keep].reset_index(drop=True)
+                t_us = t_us[keep]
+        if not len(batch):
+            return st, None
         L, S = len(batch), len(ts_state)
         merged_ts = np.concatenate(
             [np.asarray(ts_state, dtype=np.int64), t_us]
@@ -2171,13 +1723,10 @@ def streaming_over_range(
                 # COUNT(*): every row in the frame, NULL values too
                 out[name_of[(a, c, _w)]] = hi - lo
         out = out[emit_cols + names]
-        state.update((merged_ts[cut:].tolist(), *new_seeds))
-        if ttl_ms:
-            state.setTimeoutDuration(ttl_ms)
-        yield out
+        return (merged_ts[cut:].tolist(), *new_seeds), out
 
-    return _apply_with_state(
-        df.groupBy(*partition_by), fn, out_schema, state_schema, "append",
-        GroupStateTimeout.ProcessingTimeTimeout if ttl_ms else GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        df, partition_by, out_schema, state_schema,
+        ([], *[[] for _ in vcols]), step, op="streaming_over_range",
+        order_by=[ts_col], ttl_ms=ttl_ms,
     )
-

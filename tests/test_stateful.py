@@ -9,52 +9,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from flink_sql_toolkit_spark.streaming.stateful import streaming_dedup, streaming_funnel
-
-
-def _write_batches(spark, path):
-    """Two files = two micro-batches; the A-rows of user 7's match
-    arrive in batch 1, the closing B-row in batch 2."""
-    b1 = [
-        (7, dt.datetime(2024, 1, 1, 0, 0, 1), "view"),
-        (7, dt.datetime(2024, 1, 1, 0, 0, 2), "view"),
-        (8, dt.datetime(2024, 1, 1, 0, 0, 3), "view"),
-        (8, dt.datetime(2024, 1, 1, 0, 0, 4), "purchase"),
-    ]
-    b2 = [
-        (7, dt.datetime(2024, 1, 1, 0, 1, 0), "purchase"),
-        (9, dt.datetime(2024, 1, 1, 0, 1, 1), "purchase"),  # no A → no match
-    ]
-    schema = "user_id long, ts timestamp, event_type string"
-    write_rows(f"{path}/in/b1", b1, schema)
-    write_rows(f"{path}/in/b2", b2, schema)
-
-
-def test_funnel_state_crosses_microbatches(spark, tmp_path):
-    _write_batches(spark, tmp_path)
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp, event_type string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{tmp_path}/in/*")
-    )
-    out = streaming_funnel(
-        stream, "user_id", "ts", "event_type <> 'purchase'", "event_type = 'purchase'"
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("funnel_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {r.user_id: r for r in spark.table("funnel_out").collect()}
-    assert set(rows) == {7, 8}  # user 9 never matched
-    assert rows[8].n_before == 1
-    # user 7's A-rows were in batch 1, B in batch 2 → state crossed
-    assert rows[7].n_before == 2
-    assert rows[7].start_ts == dt.datetime(2024, 1, 1, 0, 0, 1)
-    assert rows[7].purchase_ts == dt.datetime(2024, 1, 1, 0, 1, 0)
+from flink_sql_toolkit_spark.streaming.stateful import streaming_dedup
 
 
 def test_streaming_dedup_keep_first(spark, tmp_path):
@@ -1883,3 +1838,214 @@ def test_running_sum_bigint_overflow_typed():
     assert out["sum"] == [big, 2 * big]  # arbitrary-precision path, in range
     with _pytest.raises(ValueError, match="BIGINT range"):
         _running_col_aggs([big, big, big, big], [0, 0, 0, 0], True)
+
+
+# -- the per-key shell (_keyed_state) ----------------------------------
+
+
+def test_keys_spanning_arrow_chunks_sort_once(spark, tmp_path):
+    """A key whose micro-batch spans several Arrow chunks is sorted
+    as one: with two-row chunks and arrival order ts 3,1,2,4,6,5 in
+    one file, LAG, RANK/ROW_NUMBER and first-N must each equal the
+    batch window function over the same rows."""
+    from pyspark.sql import Window
+
+    from flink_sql_toolkit_spark.streaming.stateful import (
+        streaming_first_n,
+        streaming_lag,
+        streaming_rank,
+    )
+
+    t = lambda s: dt.datetime(2024, 1, 1) + dt.timedelta(seconds=s)  # noqa: E731
+    schema = "k long, ts timestamp, v long"
+    rows = [(1, t(s), 10 * s) for s in (3, 1, 2, 4, 6, 5)]
+    write_rows(f"{tmp_path}/in", rows, schema)
+    w = Window.partitionBy("k").orderBy("ts")
+    batch = spark.createDataFrame(rows, schema)
+    want_lag = {r.ts: r.lag for r in batch.select("ts", F.lag("v").over(w).alias("lag")).collect()}
+    want_rank = {
+        r.ts: (r.rn, r.rk, r.drk)
+        for r in batch.select(
+            "ts", F.row_number().over(w).alias("rn"), F.rank().over(w).alias("rk"),
+            F.dense_rank().over(w).alias("drk"),
+        ).collect()
+    }
+    want_first2 = sorted(
+        r.ts for r in batch.select("ts", F.row_number().over(w).alias("rn"))
+        .where("rn <= 2").collect()
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "2")
+    try:
+        def run(out, name):
+            _run_available_now(out, tmp_path, name)
+            return spark.table(name).collect()
+
+        def stream():
+            return spark.readStream.schema(schema).parquet(f"{tmp_path}/in")
+
+        got_lag = {r.ts: r.v_lag for r in run(streaming_lag(stream(), ["k"], ["ts"], "v"), "chunk_lag")}
+        got_rank = {
+            r.ts: (r.ts_rownum, r.ts_rnk, r.ts_drnk)
+            for r in run(streaming_rank(stream(), ["k"], ["ts"]), "chunk_rank")
+        }
+        got_first2 = sorted(
+            r.ts for r in run(streaming_first_n(stream(), ["k"], ["ts"], 2), "chunk_first2")
+        )
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert got_lag == want_lag
+    assert got_rank == want_rank
+    assert got_first2 == want_first2
+
+
+# (operator, variant) -> (state struct after the version field, timeout);
+# what a savepoint holds, so a change here breaks resuming old jobs
+_STATE_LAYOUTS = {
+    ("lag", "plain"): ("ring:array<bigint>", "NoTimeout"),
+    ("lag", "ttl"): ("ring:array<bigint>", "ProcessingTimeTimeout"),
+    ("lag", "reorder"): ("held:binary,ring:array<bigint>", "EventTimeTimeout"),
+    ("lead", "plain"): ("pending:binary", "NoTimeout"),
+    ("lead", "ttl"): ("pending:binary", "ProcessingTimeTimeout"),
+    ("lead", "reorder"): ("held:binary,pending:binary", "EventTimeTimeout"),
+    ("nth_value", "plain"): ("seen:bigint,nth:bigint", "NoTimeout"),
+    ("nth_value", "ttl"): ("seen:bigint,nth:bigint", "ProcessingTimeTimeout"),
+    ("nth_value", "reorder"): ("held:binary,seen:bigint,nth:bigint", "EventTimeTimeout"),
+    ("rank", "plain"): (
+        "seen:bigint,dense:bigint,last_rank:bigint,last_val:string", "NoTimeout"),
+    ("rank", "ttl"): (
+        "seen:bigint,dense:bigint,last_rank:bigint,last_val:string",
+        "ProcessingTimeTimeout"),
+    ("rank", "reorder"): (
+        "held:binary,seen:bigint,dense:bigint,last_rank:bigint,last_val:string",
+        "EventTimeTimeout"),
+    ("first_n", "plain"): ("emitted:bigint", "NoTimeout"),
+    ("first_n", "ttl"): ("emitted:bigint", "ProcessingTimeTimeout"),
+    ("first_n", "reorder"): ("held:binary,emitted:bigint", "EventTimeTimeout"),
+    ("over_rows", "plain"): (
+        "seen:bigint,f0:array<bigint>,u0:array<bigint>", "NoTimeout"),
+    ("over_rows", "ttl"): (
+        "seen:bigint,f0:array<bigint>,u0:array<bigint>", "ProcessingTimeTimeout"),
+    ("over_rows", "reorder"): (
+        "held:binary,seen:bigint,f0:array<bigint>,u0:array<bigint>",
+        "EventTimeTimeout"),
+    ("match_recognize", "plain"): ("buf:binary,match_no:bigint", "NoTimeout"),
+    ("match_recognize", "ttl"): (
+        "buf:binary,match_no:bigint", "ProcessingTimeTimeout"),
+    ("match_recognize", "reorder"): ("buf:binary,match_no:bigint", "EventTimeTimeout"),
+    ("keep_last", "plain"): ("top:binary", "NoTimeout"),
+    ("keep_last", "ttl"): ("top:binary", "ProcessingTimeTimeout"),
+    ("over_range", "plain"): ("ts:array<bigint>,f0:array<bigint>", "NoTimeout"),
+    ("over_range", "ttl"): (
+        "ts:array<bigint>,f0:array<bigint>", "ProcessingTimeTimeout"),
+}
+
+
+def test_state_layouts_are_pinned(spark):
+    """Every operator's state struct and timeout, read from the
+    FlatMapGroupsInPandasWithState node of the analyzed plan, with
+    reorder off and on (TTL-only operators with and without a TTL),
+    matches the pinned table — with STATE_LAYOUT_VERSION unchanged, a
+    savepoint written by an earlier build then still resumes."""
+    from flink_sql_toolkit_spark.streaming import stateful as S
+
+    assert S.STATE_LAYOUT_VERSION == 2
+    src = (
+        spark.readStream.format("rate").load()
+        .selectExpr("value AS k", "timestamp AS ts", "value AS v", "'x' AS ev")
+        .withWatermark("ts", "1 second")
+    )
+    mr = dict(pattern="A B", define={"A": "ev = 'x'", "B": "ev = 'y'"},
+              measures={"n": "COUNT(A.*)"})
+    ops = {
+        "lag": lambda **kw: S.streaming_lag(src, ["k"], ["ts"], "v", **kw),
+        "lead": lambda **kw: S.streaming_lead(src, ["k"], ["ts"], "v", **kw),
+        "nth_value": lambda **kw: S.streaming_nth_value(src, ["k"], ["ts"], "v", 2, **kw),
+        "rank": lambda **kw: S.streaming_rank(src, ["k"], ["ts"], **kw),
+        "first_n": lambda **kw: S.streaming_first_n(src, ["k"], ["ts"], 1, **kw),
+        "over_rows": lambda **kw: S.streaming_over_rows(
+            src, ["k"], ["ts"], None, 2,
+            agg_specs=[("sum", "v", 2), ("max", "v", S.UNBOUNDED), ("cnt", None)],
+            **kw),
+        "match_recognize": lambda **kw: S.streaming_match_recognize(
+            src, ["k"], ["ts"], **mr, **kw),
+        "keep_last": lambda **kw: S.streaming_keep_last(src, ["k"], "ts", 1, **kw),
+        "over_range": lambda **kw: S.streaming_over_range(
+            src, ["k"], "ts", "v", "10 seconds", **kw),
+    }
+
+    def state_node(df):
+        stack = [df._jdf.queryExecution().analyzed()]
+        while stack:
+            n = stack.pop()
+            if n.getClass().getSimpleName() == "FlatMapGroupsInPandasWithState":
+                return n
+            ch = n.children()
+            stack.extend(ch.apply(i) for i in range(ch.size()))
+        raise AssertionError("no FlatMapGroupsInPandasWithState node")
+
+    variants = {"plain": {}, "ttl": {"ttl_ms": 1000}, "reorder": {"reorder_wm_col": "ts"}}
+    got = {}
+    for (name, var) in _STATE_LAYOUTS:
+        node = state_node(ops[name](**variants[var]))
+        struct = node.stateType().simpleString()
+        assert struct.startswith("struct<sv:int,"), struct
+        got[(name, var)] = (struct[len("struct<sv:int,"):-1], node.timeout().toString())
+    assert got == _STATE_LAYOUTS
+
+
+def test_streaming_mr_ttl_expiry_flushes_undecided_suffix(spark, tmp_path):
+    """An idle key's undecided suffix is decided as batch would decide
+    it when table.exec.state.ttl expires (A+ B? could still grow, so
+    streaming holds it), and the key's state is evicted."""
+    import time
+
+    from flink_sql_toolkit_spark.operators.match_recognize import match_recognize
+    from flink_sql_toolkit_spark.streaming.stateful import streaming_match_recognize
+
+    schema = "user_id long, seq long, event_type string"
+    held = [(1, 1, "a"), (1, 2, "a")]
+    write_rows(f"{tmp_path}/mttl/b0", held, schema)
+    kwargs = dict(
+        partition_by=["user_id"], order_by=["seq"], pattern="A+ B?",
+        define={"A": "event_type = 'a'", "B": "event_type = 'b'"},
+        measures={"first_a": "FIRST(A.seq)", "last_a": "LAST(A.seq)",
+                  "b": "FIRST(B.seq)", "n": "COUNT(A.*)"},
+    )
+    stream = spark.readStream.schema(schema).parquet(f"{tmp_path}/mttl/*")
+    out = streaming_match_recognize(stream, ttl_ms=2000, **kwargs)
+    q = (
+        out.writeStream.format("memory")
+        .queryName("mttl_out")
+        .option("checkpointLocation", str(tmp_path / "ckpt_mttl"))
+        .trigger(processingTime="1 second")
+        .start()
+    )
+    try:
+        deadline = time.time() + 60
+        while time.time() < deadline and not q.recentProgress:
+            time.sleep(0.2)
+        assert spark.table("mttl_out").count() == 0  # undecided: held
+        time.sleep(3)  # let the 2s TTL lapse with the key idle
+        # new data for ANOTHER key triggers the timeout sweep
+        write_rows(f"{tmp_path}/mttl/b1", [(99, 1, "c")], schema)
+        got, sweep = [], []
+        while time.time() < deadline and not (got and sweep):
+            got = spark.table("mttl_out").collect()
+            # the micro-batch that read key 99's one row
+            sweep = [p for p in q.recentProgress if p["numInputRows"] == 1]
+            time.sleep(0.5)
+    finally:
+        q.stop()
+    cols = ("user_id", "first_a", "last_a", "b", "n")
+    want = [
+        tuple(r[c] for c in cols)
+        for r in match_recognize(spark.createDataFrame(held, schema), **kwargs).collect()
+    ]
+    assert [tuple(r[c] for c in cols) for r in got] == want == [(1, 1, 2, None, 2)]
+    # only key 99's state is left: key 1 was evicted on expiry
+    assert sweep[0]["stateOperators"][0]["numRowsTotal"] == 1
